@@ -424,7 +424,7 @@ object CrawlDriver {
     val nWaves = args.lift(1).map(_.toInt).getOrElse(4)
     val dir = args.lift(2).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-crawl").toString)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
+    val cpus = HostFit.cores.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-crawl")

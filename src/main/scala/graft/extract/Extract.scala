@@ -1,7 +1,8 @@
 package graft.extract
 
-import graft.url.UrlCanon
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -63,6 +64,13 @@ object Extract {
     when(c.rlike(s"^-?\\d{1,$maxDigits}$$"), c.cast(dt))
   }
 
+  /** `from_json(json, schema)` with the schema bound as a DataType. The
+    * `from_json` builtin passes the schema to the analyzer as a JSON
+    * string, which every analysis re-parses: first as DDL (which fails on
+    * JSON, at the cost of a parser exception) and only then as JSON. */
+  private def fromJson(json: Column, schema: DataType): Column =
+    ColumnBridge.column(JsonToStructs(schema, Map.empty, ColumnBridge.expression(json)))
+
   def titleCol(text: Column): Column = trim(regexp_extract(text, TitleRe, 1))
 
   /** UNTRIMMED body — the byte-identity column. */
@@ -80,7 +88,7 @@ object Extract {
       "$.appmsgstat.like_num"), IntegerType)
 
   def commentsCol(text: Column): Column =
-    from_json(get_json_object(regexp_extract(text, CommentsRe, 1),
+    fromJson(get_json_object(regexp_extract(text, CommentsRe, 1),
       "$.elected_comment"), CommentSchema)
 
   // ------------------------------------------------------- whole tables
@@ -150,7 +158,7 @@ object Extract {
   def commentsOf(flat: DataFrame): DataFrame =
     flat.select(
       col("url_hash"),
-      posexplode(from_json(col("comments_json"),
+      posexplode(fromJson(col("comments_json"),
         CommentsPayloadSchema).getField("elected_comment")).as(Seq("idx", "c")))
       .select(
         col("url_hash"), col("idx"),
@@ -177,9 +185,11 @@ object Extract {
     */
   def discovered(listPages: DataFrame): DataFrame = {
     // pass the source wave through as src_wave when present, so callers
-    // can derive the next wave from DATA instead of a lit(waveNo) —
-    // literal-free plans stay identical across waves and hit the
-    // whole-stage-codegen cache instead of recompiling per wave
+    // can derive the next wave from DATA instead of a lit(waveNo) and
+    // every wave builds the same plan. That does not buy codegen-cache
+    // hits: a wave compiles ~170 classes and Spark's JVM-wide cache keeps
+    // spark.sql.codegen.cache.maxEntries (default 100, a static conf), so
+    // most of them are evicted before the next wave asks for them again
     val srcWave = if (listPages.columns.contains("wave")) col("wave")
       else lit(0).cast(IntegerType)
     val parsed = listPages.select(
@@ -188,7 +198,7 @@ object Extract {
       tryNum(get_json_object(col("text"), "$.can_msg_continue"), IntegerType)
         .as("can_continue"),
       get_json_object(col("text"), "$.next_offset").as("next_offset"),
-      from_json(get_json_object(col("text"), "$.general_msg_list"), MsgListSchema)
+      fromJson(get_json_object(col("text"), "$.general_msg_list"), MsgListSchema)
         .as("msgs"))
 
     val details = parsed

@@ -73,16 +73,52 @@ object Wave {
       /** persisted intermediates — caller unpersists after commit. */
       cached: Seq[DataFrame])
 
+  // ------------------------------------------------------- host lookups
+
+  /** `df` left-joined to the broadcast `table` on the row's host, with
+    * xxhash64(host) as the only equi-join key.
+    *
+    * Why host lookups are long-keyed: a hash join on a string key builds
+    * an `UnsafeHashedRelation`, whose `BytesToBytesMap` reserves one full
+    * `spark.buffer.pageSize` memory page however few rows it holds (the
+    * default page grows with heap per core up to 64 MB, reached at a 7 GB
+    * heap on 4 cores). A 201-row budgets broadcast then pins as much heap
+    * as a million-row one, and the pipelined loop keeps two waves'
+    * broadcasts alive at once. A single long key builds a
+    * `LongHashedRelation`, sized to its rows, which keeps every row of a
+    * key. The exact host match is a residual condition, so a 64-bit
+    * collision can neither drop a host's rows nor lend them to another
+    * host, and a null host matches nothing, as in the host-string join.
+    * It is wrapped in `coalesce(…, false)` because a plain host equality
+    * would be lifted into a second, string-typed build key. PlanSpec
+    * fails a wave plan whose robots or budgets lookup builds on a string
+    * key. `hash` lets a test force several hosts into one bucket.
+    *
+    * Output columns as `df.join(table, Seq("host"), "left")`: host,
+    * `df`'s other columns, then `table`'s. */
+  def joinByHost(df: DataFrame, table: DataFrame,
+      hash: Column => Column = xxhash64(_)): DataFrame = {
+    val values = table.columns.filter(_ != "host")
+    val build = table.select(Seq(hash(col("host")).as("__build_hash"),
+      col("host").as("__build_host")) ++ values.map(col): _*)
+    df.withColumn("__probe_hash", hash(col("host")))
+      .join(broadcast(build), col("__probe_hash") === col("__build_hash") &&
+        coalesce(col("host") === col("__build_host"), lit(false)), "left")
+      .select(("host" +: df.columns.filter(_ != "host") ++: values).map(col): _*)
+  }
+
   // ------------------------------------------------------------- robots
 
   /** Robots gating (J4/P3): longest-prefix-match per URL, default-allow
-    * when a host has no rules. The match is a higher-order `aggregate`
-    * over the per-host rules array — no UDF, no window.
+    * when a host has no rules. The verdict is the
+    * [[graft.functions.RobotsAllowed]] codegen kernel over the per-host
+    * rules array — no UDF, no window.
     *
     * Join physics (two regimes, same semantics):
     *   - `shuffleJoin=false` (default; mp.weixin-shaped corpora, few
-    *     hosts): rules pre-aggregated per host (tiny) and broadcast —
-    *     zero shuffle on the frontier, the gate rides the scan stage.
+    *     hosts): rules pre-aggregated per host (tiny) and broadcast,
+    *     keyed on the host hash ([[joinByHost]]) — zero shuffle on the
+    *     frontier, the gate rides the scan stage.
     *   - `shuffleJoin=true` (Common-Crawl regime, ~10^8 rule hosts: the
     *     aggregated rules table is multi-GB, unbroadcastable): host-keyed
     *     shuffle join. The frontier pays one slim exchange; this is
@@ -105,7 +141,7 @@ object Wave {
     val joined =
       if (shuffleJoin)
         withPath.hint("shuffle_hash").join(rulesByHost, Seq("host"), "left")
-      else withPath.join(broadcast(rulesByHost), Seq("host"), "left")
+      else joinByHost(withPath, rulesByHost)
     // longest matching prefix wins; equal-length tie → allow wins (RFC
     // 9309 least-restrictive tie-break). The verdict is order-
     // independent: the result is (max matching len, "any allow rule at
@@ -180,10 +216,9 @@ object Wave {
         ceil(col("count").cast("double") / cfg.targetBucketRows)
           .cast(IntegerType).as("n_salts"))
 
-    val annotated = frontier
-      .join(broadcast(saltCounts), Seq("host"), "left")
-      .join(broadcast(budgets.select(col("host"), col("tokens_per_round"))),
-        Seq("host"), "left")
+    val annotated =
+      joinByHost(frontier.join(broadcast(saltCounts), Seq("host"), "left"),
+        budgets.select(col("host"), col("tokens_per_round")))
       .na.fill(Map("n_salts" -> 1, "tokens_per_round" -> cfg.defaultTokens))
       .withColumn("salt", pmod(col("url_hash"), col("n_salts")).cast(IntegerType))
       .select(col("url"), col("url_hash"), col("host"), col("biz"), col("kind"),
@@ -308,7 +343,8 @@ object Wave {
     // discovery → frontier entries for wave k+1 with per-account recency
     // priority: lists first (0), details ranked newest-first per biz (W1)
     // wave numbers derive from the data (src_wave + 1), never lit(waveNo):
-    // the whole plan is wave-invariant and codegen-cache-friendly
+    // the whole plan is wave-invariant (see Extract.discovered for why that
+    // still recompiles most generated classes each wave)
     val disc = Extract.discovered(listPages)
     val wPrio = Window.partitionBy(col("biz"))
       .orderBy(col("publish_unix").desc, col("url_hash").asc)
@@ -420,7 +456,7 @@ object Wave {
     * (stage, partition_id) — a row's counts all come from one physical
     * partition of one stage. Every count is a real aggregate over the
     * ledger plan (wave derived from the data, not lit(waveNo) — keeps
-    * wave plans codegen-cache identical); wave-level extracted/wall_ms
+    * wave plans identical across waves); wave-level extracted/wall_ms
     * live in the snapshot manifest, not here. */
   def metrics(runId: String, ledger: DataFrame): DataFrame = {
     def n(status: String) =

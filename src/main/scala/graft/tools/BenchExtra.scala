@@ -22,7 +22,7 @@ import scala.util.control.NonFatal
 object BenchExtra {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val cpus = graft.HostFit.cores
     val reps = sys.env.getOrElse("BENCHX_REPS", "3").toInt
     val useNoop = sys.env.getOrElse("BENCHX_NOOP", "0") == "1"
     val plansDir = args.headOption.filter(_.nonEmpty)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.SparkSession
   * bottlenecks are measured, not guessed. args: [cores] [rows] */
 object BenchProbe {
   def main(args: Array[String]): Unit = {
-    val cores = args.lift(0).map(_.toInt).getOrElse(8)
+    val cores = args.lift(0).map(_.toInt).getOrElse(graft.HostFit.cores)
     val rows = args.lift(1).map(_.toInt).getOrElse(300000)
     val spark = SparkSession.builder()
       .master(s"local[$cores]")

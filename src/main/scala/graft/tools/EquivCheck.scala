@@ -288,7 +288,7 @@ object EquivCheck {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16").toInt
+    val cpus = graft.HostFit.cores
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-equiv-check")

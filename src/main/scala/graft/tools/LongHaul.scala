@@ -36,7 +36,7 @@ object LongHaul {
   def main(args: Array[String]): Unit = {
     val nPages = args.lift(0).map(_.toInt).getOrElse(3000)
     val targetWaves = args.lift(1).map(_.toInt).getOrElse(54)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
+    val cpus = graft.HostFit.cores.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .appName("graft-longhaul")

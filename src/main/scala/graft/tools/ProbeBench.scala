@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * hits both arms equally. args: [cores] [rows] [reps] */
 object ProbeBench {
   def main(args: Array[String]): Unit = {
-    val cores = args.lift(0).map(_.toInt).getOrElse(8)
+    val cores = args.lift(0).map(_.toInt).getOrElse(graft.HostFit.cores)
     val rows = args.lift(1).map(_.toInt).getOrElse(2000000)
     val reps = args.lift(2).map(_.toInt).getOrElse(5)
     val nShards = 16

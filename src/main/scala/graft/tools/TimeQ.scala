@@ -2,8 +2,9 @@ package graft.tools
 import org.apache.spark.sql.SparkSession
 object TimeQ {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions","16")
+    val cores = graft.HostFit.cores
+    val spark = SparkSession.builder().master(s"local[$cores]")
+      .config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.ui.enabled","false")
       .config("spark.sql.session.timeZone","UTC").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

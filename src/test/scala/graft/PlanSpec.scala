@@ -104,6 +104,91 @@ class PlanSpec extends SparkSpec {
     assert(dS.exceptAll(dB).isEmpty && dB.exceptAll(dS).isEmpty, "denied differ")
   }
 
+  /** Every physical node of `p`, descending into adaptive plans, query
+    * stages, reused exchanges, subqueries and cached relations. */
+  private def allNodes(p: org.apache.spark.sql.execution.SparkPlan)
+      : Seq[org.apache.spark.sql.execution.SparkPlan] = {
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    val inner = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case m: InMemoryTableScanExec => Seq(m.relation.cachedPlan)
+      case r: ReusedExchangeExec => Seq(r.child)
+      case _ => p.children ++ p.subqueries
+    }
+    p +: inner.flatMap(allNodes)
+  }
+
+  test("a crawl wave's robots and budgets lookups build on the long host hash") {
+    // a string-keyed hash relation reserves a full memory page however
+    // few rows it holds, so the wave's broadcast robots-rules and
+    // budgets lookups are keyed on xxhash64(host) (Wave.joinByHost):
+    // this gates every plan the crawl loop executes — chain warm-up,
+    // commit writes — in the crawl sessions' configuration (AQE off,
+    // 128m broadcast threshold)
+    import org.apache.spark.sql.catalyst.optimizer.BuildLeft
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.joins.HashJoin
+    import org.apache.spark.sql.types.LongType
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[QueryExecution]()
+    val marker = "planspec-hash-key-marker"
+    @volatile var markerSeen = false
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        if (qe.analyzed.toString.contains(marker)) markerSeen = true
+        else plans.add(qe)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val cfg = SynthConfig(nAccounts = 3, articlesPerAccount = 6, longTail = 40)
+    val pagesIdx = Wave.pageIndex(Synth.pages(spark, cfg).toDF()).cache()
+    val confs = Map("spark.sql.adaptive.enabled" -> "false",
+      "spark.sql.autoBroadcastJoinThreshold" -> "128m")
+    val before = confs.keys.map(k => k -> spark.conf.getOption(k)).toMap
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    spark.listenerManager.register(listener)
+    try {
+      val dir = java.nio.file.Files.createTempDirectory("planspec-wave").toString
+      val catalog = new graft.checkpoint.SnapshotCatalog(dir, spark)
+      val rc = CrawlDriver.RunConfig(dir, nWaves = 1, seenCapacity = 50000L, nShards = 4)
+      CrawlDriver.init(spark, catalog, Synth.seedFrontier(spark, cfg).toDF(),
+        Synth.robots(spark, cfg).toDF(), Synth.budgets(spark, cfg).toDF(), rc)
+      CrawlDriver.run(spark, catalog, pagesIdx, rc)
+      // listener events arrive in order on the listener bus: once a
+      // marker query's event is in, every crawl plan's is too
+      spark.range(1).selectExpr(s"'$marker' AS m").collect()
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (!markerSeen && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(markerSeen, "query listener never saw the marker query")
+      import scala.jdk.CollectionConverters._
+      val joins = plans.asScala.toSeq.flatMap(qe => allNodes(qe.executedPlan))
+        .collect { case j: HashJoin => j }
+      def lookups(valueCol: String) = joins.filter { j =>
+        val build = if (j.buildSide == BuildLeft) j.left else j.right
+        build.output.exists(_.name == valueCol)
+      }
+      Seq("__rules", "tokens_per_round").foreach { valueCol =>
+        val found = lookups(valueCol)
+        assert(found.nonEmpty, s"no hash join builds $valueCol:\n" +
+          joins.map(_.simpleString(200)).mkString("\n"))
+        found.foreach { j =>
+          val keys = if (j.buildSide == BuildLeft) j.leftKeys else j.rightKeys
+          assert(j.nodeName == "BroadcastHashJoin" && keys.map(_.dataType) == Seq(LongType),
+            s"$valueCol lookup must build on the long host hash alone:\n${j.simpleString(400)}")
+        }
+      }
+    } finally {
+      spark.listenerManager.unregister(listener)
+      before.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+      pagesIdx.unpersist()
+    }
+  }
+
   test("dedup queries shuffle the 8-byte hash, never the document text") {
     Seq("q_dedup_exact", "q_dedup_norm").foreach { q =>
       val plan = planOf(SparkEntry.queries(q)(spark, sf))
