@@ -443,7 +443,6 @@ object CrawlDriver {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    graft.plans.GraftPlanner.install(spark) // custom ShardedProbeExec on the hot path
 
     val synthCfg = SynthConfig.forTargetRows(nPages)
     // the corpus includes each host's /robots.txt page — the crawl

@@ -10,19 +10,14 @@ import org.apache.spark.sql.types._
   *
   * The grammar is normatively fixed by FIXTURES.md §1 and is the
   * byte-identity surface of BASELINE.json's input_hint ("byte-identical
-  * extracted text per url"): `body` is group 1 of BodyRe, UNTRIMMED, and
-  * must never pass through anything that re-encodes or normalizes it.
-  * Everything here is Catalyst built-ins (regexp_extract / get_json_object
-  * / from_json / timestamp_seconds) — whole-stage codegen end to end,
-  * no UDFs.
+  * extracted text per url"): `body` is the `js_content` div's inner
+  * text, UNTRIMMED, and must never pass through anything that re-encodes
+  * or normalizes it. Articles come from the fused [[ExtractArticle]]
+  * expression; discovery and comments are Catalyst built-ins
+  * (get_json_object / from_json / timestamp_seconds) — whole-stage
+  * codegen end to end, no UDFs.
   */
 object Extract {
-
-  val TitleRe = "(?s)<h2 class=\"rich_media_title\"[^>]*>\\s*(.*?)</h2>"
-  val BodyRe = "(?s)<div id=\"js_content\"[^>]*>(.*?)</div>"
-  val PublishRe = "var ct = \"(\\d+)\""
-  val AppMsgExtRe = "(?s)<script type=\"application/json\" id=\"appmsgext\">(.*?)</script>"
-  val CommentsRe = "(?s)<script type=\"application/json\" id=\"comments\">(.*?)</script>"
 
   val CommentSchema: ArrayType = ArrayType(StructType(Seq(
     StructField("content", StringType),
@@ -56,7 +51,7 @@ object Extract {
     * (Spark 4 ANSI mode makes bare cast('' as long) raise). Digit-count
     * bounds also reject range-overflow strings (20-digit "ct" etc.),
     * which pass a bare \d+ guard but still throw in the cast. */
-  private def tryNum(c: Column, dt: DataType): Column = {
+  private[extract] def tryNum(c: Column, dt: DataType): Column = {
     val maxDigits = dt match {
       case IntegerType => 9
       case _ => 18
@@ -68,28 +63,8 @@ object Extract {
     * `from_json` builtin passes the schema to the analyzer as a JSON
     * string, which every analysis re-parses: first as DDL (which fails on
     * JSON, at the cost of a parser exception) and only then as JSON. */
-  private def fromJson(json: Column, schema: DataType): Column =
+  private[extract] def fromJson(json: Column, schema: DataType): Column =
     ColumnBridge.column(JsonToStructs(schema, Map.empty, ColumnBridge.expression(json)))
-
-  def titleCol(text: Column): Column = trim(regexp_extract(text, TitleRe, 1))
-
-  /** UNTRIMMED body — the byte-identity column. */
-  def bodyCol(text: Column): Column = regexp_extract(text, BodyRe, 1)
-
-  def publishTsCol(text: Column): Column =
-    timestamp_seconds(tryNum(regexp_extract(text, PublishRe, 1), LongType))
-
-  def readCountCol(text: Column): Column =
-    tryNum(get_json_object(regexp_extract(text, AppMsgExtRe, 1),
-      "$.appmsgstat.read_num"), IntegerType)
-
-  def likeCountCol(text: Column): Column =
-    tryNum(get_json_object(regexp_extract(text, AppMsgExtRe, 1),
-      "$.appmsgstat.like_num"), IntegerType)
-
-  def commentsCol(text: Column): Column =
-    fromJson(get_json_object(regexp_extract(text, CommentsRe, 1),
-      "$.elected_comment"), CommentSchema)
 
   // ------------------------------------------------------- whole tables
 

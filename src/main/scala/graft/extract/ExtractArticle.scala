@@ -10,7 +10,7 @@ import org.apache.spark.unsafe.types.UTF8String
 /** Fused article extraction as a single Catalyst expression (SURVEY.md §5
   * escape hatch (a), exercised because profiles demanded it).
   *
-  * The composed-built-in path (Extract.titleCol/bodyCol/…) calls
+  * The composed-built-in path (ExtractSpec's `BuiltinExtract` twin) calls
   * regexp_extract / get_json_object six times per page; EACH call
   * converts the page's UTF8String to a fresh java.lang.String — ~150 KB
   * of garbage per 25 KB page, which makes extraction GC-bound instead of

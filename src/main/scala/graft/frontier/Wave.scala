@@ -65,7 +65,7 @@ object Wave {
         * In-batch first-wins losers (same url_hash enqueued twice in
         * ONE wave — possible after a refresh collides with a stale
         * discovered entry; the committed frontier itself is deduped)
-        * are dropped inside the fused probe cogroup before flagging
+        * are dropped inside the fused probe before flagging
         * and are NOT ledger rows: "duplicate" means seen-set duplicate.
         * So sum(statuses) counts distinct batch keys, not raw frontier
         * rows — the (rare) in-batch drop count is the difference. */
@@ -198,7 +198,7 @@ object Wave {
       /** Where to count per-host rows for salt derivation. The crawl
         * loop passes the COMMITTED frontier table: a slim parquet scan
         * makes the salt broadcast an independent query stage (it
-        * materializes concurrently with the probe cogroup instead of
+        * materializes concurrently with the probe instead of
         * serializing behind the whole decision chain — one less barrier
         * on the wave's critical path). Pre-gate counts are an upper
         * bound on post-gate rows; over-salting a host never breaks the
@@ -280,26 +280,14 @@ object Wave {
     // see robotsGate). Gate-vs-dedupe order is immaterial: duplicates
     // share a canonical url, hence a robots verdict.
     val (allowed, denied) = robotsGate(frontier, robots, cfg.robotsShuffleJoin)
-    // ONE cogroup fuses first-wins in-batch dedupe (W3) with the shard-
-    // aligned sketch probe (no broadcast state) — the wave's critical
-    // path pays a single frontier shuffle before budget enforcement.
-    // Persisted lazily: the commit's concurrent write jobs materialize
-    // the caches (block-level cache locking dedupes concurrent computes).
-    val aSchema = allowed.schema // the gate's join may reorder columns
-    // fast path: the custom ShardedProbeExec physical operator
-    // (InternalRow-level — no encoder round-trip) when the session has
-    // the strategy installed; the Dataset-cogroup twin is the portable
-    // fallback and the reference semantics (ShardedProbePlanSpec pins
-    // row-identity between the two)
-    val probed0 =
-      if (graft.plans.GraftPlanner.installed(spark))
-        graft.plans.GraftPlanner.probeDedupe(allowed, shards.toDF(), nShards,
-          ShardedSeen.DefaultMaxShardBufferRows)
-      else ShardedSeen.probeDedupe(allowed, shards, nShards,
-        prioIdx = aSchema.fieldIndex("priority"),
-        kindIdx = aSchema.fieldIndex("kind"),
-        urlIdx = aSchema.fieldIndex("url"))
-    val probed = probed0.persist(DISK)
+    // ONE ShardedProbe operator fuses first-wins in-batch dedupe (W3)
+    // with the shard-aligned sketch probe (no broadcast state) — the
+    // wave's critical path pays a single frontier shuffle before budget
+    // enforcement. Persisted lazily: the commit's concurrent write jobs
+    // materialize the caches (block-level cache locking dedupes
+    // concurrent computes).
+    val probed = graft.plans.GraftPlanner.probeDedupe(allowed, shards.toDF(), nShards,
+      ShardedSeen.DefaultMaxShardBufferRows).persist(DISK)
     val flagged = ShardedSeen.confirmFlag(probed, seenExact).persist(DISK)
     val fresh = flagged.filter(!col("__dup")).drop("__dup")
     val dups = flagged.filter(col("__dup")).drop("__dup")

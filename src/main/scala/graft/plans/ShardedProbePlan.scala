@@ -30,7 +30,7 @@ import org.apache.spark.sql.types.{BooleanType, IntegerType}
   * `requiredNumPartitions = nShards`, so EnsureRequirements co-locates a
   * frontier slice with exactly its shards' sketch rows — the sketch
   * state reaches executors through the exchange, never a broadcast,
-  * never the driver (the 10^10 contract, same as the cogroup path).
+  * never the driver (the 10^10 contract).
   * Murmur3 may map several shard ids to one partition; the per-partition
   * sketches are MERGED, which can only widen `maybe` (bloom/cuckoo
   * merge has no false negatives) — safe because every maybe is exactly-
@@ -181,9 +181,9 @@ final case class ShardedProbeExec(
     copy(left = newLeft, right = newRight)
 }
 
-/** Plans [[ShardedProbe]] → [[ShardedProbeExec]]. Install per session
-  * with [[GraftPlanner.install]] (public `experimental.extraStrategies`
-  * API) or session-wide via `spark.sql.extensions=graft.plans.GraftExtensions`. */
+/** Plans [[ShardedProbe]] → [[ShardedProbeExec]]; [[GraftPlanner.probeDedupe]]
+  * installs it on the frontier's session (the public
+  * `experimental.extraStrategies` API). */
 object ShardedProbeStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case p: ShardedProbe =>
@@ -191,12 +191,6 @@ object ShardedProbeStrategy extends SparkStrategy {
         planLater(p.left), planLater(p.right)) :: Nil
     case _ => Nil
   }
-}
-
-/** `spark.sql.extensions` entry point (the SparkSessionExtensions route). */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =
-    ext.injectPlannerStrategy(_ => ShardedProbeStrategy)
 }
 
 object GraftPlanner {
@@ -207,18 +201,15 @@ object GraftPlanner {
       exp.extraStrategies = exp.extraStrategies :+ ShardedProbeStrategy
   }
 
-  def installed(spark: SparkSession): Boolean =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-      .experimental.extraStrategies.contains(ShardedProbeStrategy) ||
-      spark.sessionState.planner.strategies.contains(ShardedProbeStrategy)
-
   /** The probe+dedupe DataFrame over the custom operator: frontier
-    * columns + `__maybe`. Semantics ≡ `ShardedSeen.probeDedupe`
-    * (spec-pinned); requires [[install]] on this session. */
+    * columns + `__maybe`. Installs the strategy on the frontier's
+    * session, so any session (a `newSession()` included) plans the
+    * custom exec. Semantics ≡ the Dataset-cogroup reference twin
+    * (spec-pinned). */
   def probeDedupe(frontier: DataFrame, shards: DataFrame, nShards: Int,
       maxBufferRows: Long): DataFrame = {
     val spark = frontier.sparkSession
-    require(installed(spark), "GraftPlanner.install(spark) first")
+    install(spark)
     // fail at PLAN CONSTRUCTION, not mid-execute: the exec resolves
     // these columns by name, so a renamed/projected-away column is
     // rejected here, before any job runs (round-3 advice). The check

@@ -163,7 +163,7 @@ object TextQueries {
     // interpreted zip_with/aggregate lambdas; oracle-checked, so the
     // kernel is the f32 oracle replica (see cosineToQueryF32Col).
     "q_embed_threshold" -> ((s, d) => {
-      brutCosF32(t(s, d, "embeddings"))
+      brutCos(t(s, d, "embeddings"), graft.functions.CosineF32(_, _), cosineToQueryF32Col)
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
         .filter(col("cos_sim") >= 0.25)
     }),
@@ -171,7 +171,7 @@ object TextQueries {
     // brute-force top-k (rows-only: k-boundary float ties are not
     // oracle-stable; correctness pinned in SimilaritySpec)
     "q_embed_topk" -> ((s, d) => {
-      brutCos(t(s, d, "embeddings"))
+      brutCos(t(s, d, "embeddings"), cosineCol, cosineToQueryCol)
         .orderBy(col("cos_raw").desc, col("vec_id").asc)
         .limit(10)
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
@@ -183,7 +183,7 @@ object TextQueries {
     // passing q_embed_threshold oracle already proves the round-4
     // scores match), unlike the raw-float k-boundary ties above
     "q_embed_topk_r4" -> ((s, d) => {
-      brutCosF32(t(s, d, "embeddings"))
+      brutCos(t(s, d, "embeddings"), graft.functions.CosineF32(_, _), cosineToQueryF32Col)
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id").asc)
         .limit(10)
@@ -371,39 +371,27 @@ object TextQueries {
     * `(vec_id, cos_raw)` over every other vector — r6 shared plan for
     * the three q_embed_* queries: the query vector comes from ONE
     * pushed-down point lookup (the Ivf.indexedTopK pattern) and the
-    * cosine is the fused [[cosineToQueryCol]] codegen kernel. Falls
-    * back to the r5 crossJoin shape when the corpus has no query row
-    * (yields the same empty result with the same schema). */
-  private def brutCos(e: DataFrame): DataFrame = {
+    * cosine is the fused `toQueryCos` codegen kernel. Falls back to the
+    * r5 crossJoin shape with `pairCos` when the corpus has no query row
+    * (yields the same empty result with the same schema). The two
+    * oracle-CHECKED queries (threshold / topk_r4) pass the oracle's f32
+    * kernels ([[graft.functions.CosineF32]], [[cosineToQueryF32Col]]);
+    * the rows-only q_embed_topk passes the f64 [[cosineCol]] /
+    * [[cosineToQueryCol]] its spec and the IVF exactness proofs compare
+    * against. */
+  private def brutCos(e: DataFrame,
+      pairCos: (Column, Column) => Column,
+      toQueryCos: (Column, Seq[Float]) => Column): DataFrame = {
     val qRow = e.filter(col("vec_id") === 0).select(col("embedding")).head(1)
     if (qRow.isEmpty) {
       val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
       e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(q))
-        .select(col("vec_id"), cosineCol(col("embedding"), col("qe")).as("cos_raw"))
+        .select(col("vec_id"), pairCos(col("embedding"), col("qe")).as("cos_raw"))
     } else {
       e.filter(col("vec_id") =!= 0)
         .select(col("vec_id"),
-          cosineToQueryCol(col("embedding"), qRow(0).getSeq[Float](0)).as("cos_raw"))
-    }
-  }
-
-  /** [[brutCos]] in the oracle's f32 arithmetic — the shared plan of the
-    * two oracle-CHECKED brute-cosine queries (threshold / topk_r4); the
-    * rows-only q_embed_topk stays on the f64 [[brutCos]] its spec and
-    * the IVF exactness proofs compare against. */
-  private def brutCosF32(e: DataFrame): DataFrame = {
-    val qRow = e.filter(col("vec_id") === 0).select(col("embedding")).head(1)
-    if (qRow.isEmpty) {
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-      e.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"),
-          graft.functions.CosineF32(col("embedding"), col("qe")).as("cos_raw"))
-    } else {
-      e.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"),
-          cosineToQueryF32Col(col("embedding"), qRow(0).getSeq[Float](0)).as("cos_raw"))
+          toQueryCos(col("embedding"), qRow(0).getSeq[Float](0)).as("cos_raw"))
     }
   }
 

@@ -2,9 +2,8 @@ package graft.seen
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.BooleanType
 import org.apache.spark.util.sketch.BloomFilter
 
 /** One shard's sketch state: a bloom + a cuckoo filter over the shard's
@@ -68,13 +67,14 @@ final case class SketchShard(shard: Int, bytes: Array[Byte])
   * a 1%-fpp bloom alone is ~12 GB — unbroadcastable, and any driver-side
   * merge is a serial stall. Instead:
   *
-  *   - PROBE: the frontier is cogrouped with the shards table on the
-  *     shard key — each task sees exactly its shards' rows plus those
-  *     shards' (small) sketch bytes. No broadcast, no driver; the only
-  *     data movement is one linear shuffle of the frontier slice plus
-  *     sketch bytes ≈ state/nShards per task. At cluster scale the seen
-  *     table and frontier are bucketed on the same key, so this aligns
-  *     with the exact join's partitioning.
+  *   - PROBE: [[graft.plans.GraftPlanner.probeDedupe]] co-partitions
+  *     the frontier with the shards table on the shard key — each task
+  *     sees exactly its shards' rows plus those shards' (small) sketch
+  *     bytes. No broadcast, no driver; the only data movement is one
+  *     linear shuffle of the frontier slice plus sketch bytes ≈
+  *     state/nShards per task. At cluster scale the seen table and
+  *     frontier are bucketed on the same key, so this aligns with the
+  *     exact join's partitioning.
   *   - ROUTE: rows whose shard sketch says "definitely new" skip the
   *     exact join entirely; only the maybe-slice (true dupes + a few %
   *     false positives) joins the exact seen table.
@@ -90,7 +90,7 @@ final case class SketchShard(shard: Int, bytes: Array[Byte])
   */
 object ShardedSeen {
 
-  /** Per-task buffer ceiling for the fused dedupe+probe cogroup: ~16M
+  /** Per-task buffer ceiling for the fused dedupe+probe: ~16M
     * slim frontier Rows ≈ a few GB — comfortably inside a normal
     * executor; a wave bigger than nShards × this is a sizing bug the
     * guard reports instead of OOM-ing. */
@@ -99,107 +99,9 @@ object ShardedSeen {
   def shardOf(urlHash: Long, nShards: Int): Int =
     ((urlHash % nShards) + nShards).toInt % nShards
 
-  /** Row + one boolean column with ONE array copy — `fromSeq(toSeq :+ x)`
-    * copies the row twice per frontier row on the probe hot path. */
-  private def appendFlag(r: org.apache.spark.sql.Row, flag: Boolean): org.apache.spark.sql.Row = {
-    val n = r.length
-    val arr = new Array[Any](n + 1)
-    var i = 0
-    while (i < n) { arr(i) = r.get(i); i += 1 }
-    arr(n) = flag
-    new org.apache.spark.sql.catalyst.expressions.GenericRow(arr)
-  }
-
   def emptyShards(spark: SparkSession): Dataset[SketchShard] = {
     import spark.implicits._
     spark.emptyDataset[SketchShard]
-  }
-
-  /** Stage 1: tag every frontier row with `__maybe` via the shard-
-    * aligned sketch probe (cogroup — no broadcast, no driver). Callers
-    * that branch on the result should persist it (the cogroup would
-    * otherwise re-run per consumer). */
-  def probeShards(
-      frontier: DataFrame,
-      shards: Dataset[SketchShard],
-      nShards: Int): DataFrame = {
-    val spark = frontier.sparkSession
-    import spark.implicits._
-    val hashIdx = frontier.schema.fieldIndex("url_hash")
-    val outEnc = Encoders.row(frontier.schema.add("__maybe", BooleanType))
-    frontier
-      .groupByKey(r => shardOf(r.getLong(hashIdx), nShards))
-      .cogroup(shards.groupByKey(_.shard)) { (_, rows, sks) =>
-        val sketch = sks.map(s => ShardSketch.deserialize(s.bytes))
-          .reduceOption(_.merge(_))
-        sketch match {
-          case None => rows.map(r => appendFlag(r, false))
-          case Some(sk) => rows.map(r =>
-            appendFlag(r, sk.mightContain(r.getLong(hashIdx))))
-        }
-      }(outEnc)
-  }
-
-  /** [[probeShards]] FUSED with first-wins in-batch dedupe (W3): both
-    * key on url_hash (a url_hash's duplicates land in one shard), so one
-    * cogroup replaces the window-shuffle + probe-shuffle pair — one less
-    * barrier on every wave's critical path. Winner per url_hash is the
-    * (priority, kind, url) minimum, exactly [[graft.frontier.Wave
-    * .dedupeInBatch]]'s ordering. Buffers one shard's frontier slice per
-    * task (wave/nShards rows — pick nShards so that fits, same bound as
-    * the sketch update); `maxBufferRows` turns a mis-sized nShards into
-    * a fail-fast with an actionable message instead of an opaque
-    * executor OOM mid-wave. */
-  def probeDedupe(
-      frontier: DataFrame,
-      shards: Dataset[SketchShard],
-      nShards: Int,
-      prioIdx: Int,
-      kindIdx: Int,
-      urlIdx: Int,
-      maxBufferRows: Long = DefaultMaxShardBufferRows): DataFrame = {
-    val spark = frontier.sparkSession
-    import spark.implicits._
-    val hashIdx = frontier.schema.fieldIndex("url_hash")
-    val outEnc = Encoders.row(frontier.schema.add("__maybe", BooleanType))
-    // direct field comparator — Ordering.by would allocate a Tuple4 (+
-    // 2 boxed longs) per comparison: ~n log n tuples per shard slice,
-    // hundreds of MB of garbage per fat wave
-    implicit val rowOrd: Ordering[org.apache.spark.sql.Row] =
-      new Ordering[org.apache.spark.sql.Row] {
-        def compare(a: org.apache.spark.sql.Row, b: org.apache.spark.sql.Row): Int = {
-          val h = java.lang.Long.compare(a.getLong(hashIdx), b.getLong(hashIdx))
-          if (h != 0) return h
-          val p = java.lang.Long.compare(a.getLong(prioIdx), b.getLong(prioIdx))
-          if (p != 0) return p
-          val k = a.getString(kindIdx).compareTo(b.getString(kindIdx))
-          if (k != 0) return k
-          a.getString(urlIdx).compareTo(b.getString(urlIdx))
-        }
-      }
-    frontier
-      .groupByKey(r => shardOf(r.getLong(hashIdx), nShards))
-      .cogroup(shards.groupByKey(_.shard)) { (shard, rows, sks) =>
-        val sketch = sks.map(s => ShardSketch.deserialize(s.bytes))
-          .reduceOption(_.merge(_))
-        val buf = scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.Row]
-        rows.foreach { r =>
-          require(buf.size < maxBufferRows,
-            s"shard $shard frontier slice exceeds maxBufferRows=$maxBufferRows " +
-              s"— raise nShards so wave/nShards fits in task memory")
-          buf += r
-        }
-        val sorted = buf.toArray.sorted
-        var lastHash = 0L
-        var first = true
-        sorted.iterator.filter { r =>
-          val h = r.getLong(hashIdx)
-          val keep = first || h != lastHash
-          lastHash = h; first = false
-          keep
-        }.map(r =>
-          appendFlag(r, sketch.exists(_.mightContain(r.getLong(hashIdx)))))
-      }(outEnc)
   }
 
   /** Stage 2: turn `__maybe` into `__dup` (true = already seen) by
@@ -221,15 +123,6 @@ object ShardedSeen {
     definitelyNew.unionByName(confirmed.select(definitelyNew.columns.map(col): _*))
       .drop("__maybe")
   }
-
-  /** Rows of `frontier` whose url_hash is NOT in the seen set. */
-  def notSeen(
-      frontier: DataFrame,
-      seenExact: DataFrame,
-      shards: Dataset[SketchShard],
-      nShards: Int): DataFrame =
-    confirmFlag(probeShards(frontier, shards, nShards), seenExact)
-      .filter(!col("__dup")).drop("__dup")
 
   /** Apply a wave's delta to the shard table: deletes first (frontier
     * retraction), then inserts (the wave's fetched keys). Runs entirely

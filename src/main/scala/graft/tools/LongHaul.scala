@@ -47,7 +47,6 @@ object LongHaul {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.plans.GraftPlanner.install(spark)
     import spark.implicits._
 
     val synthCfg = SynthConfig.forTargetRows(nPages)

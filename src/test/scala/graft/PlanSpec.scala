@@ -203,19 +203,22 @@ class PlanSpec extends SparkSpec {
     }
   }
 
-  test("seen filter: shard-aligned cogroup probe, NO broadcast of seen state") {
-    // structural 10^10 gate: the sketch state reaches executors via a
-    // shard-keyed CoGroup (each task sees only its shards), never as a
-    // broadcast variable/join; the exact join sees only the maybe-slice
+  test("seen filter: ShardedProbe probe, NO broadcast of seen state") {
+    // structural 10^10 gate: the sketch state reaches executors through
+    // the ShardedProbe operator's shard-keyed exchange (each task sees
+    // only its shards), never as a broadcast variable/join; the exact
+    // join sees only the maybe-slice
     import spark.implicits._
+    import graft.seen.ShardedSeen
     val seen = (1L to 100L).toDF("url_hash")
-    val shards = graft.seen.ShardedSeen.updatedShards(
-      graft.seen.ShardedSeen.emptyShards(spark), seen,
+    val shards = ShardedSeen.updatedShards(ShardedSeen.emptyShards(spark), seen,
       spark.range(0).selectExpr("id as url_hash"), 1000, 2)
-    val frontier = (1L to 1000L).map(i => (i, s"u$i")).toDF("url_hash", "url")
-    val out = graft.seen.ShardedSeen.notSeen(frontier, seen, shards, 2)
+    val frontier = (1L to 1000L).map(i => (s"u$i", i, "detail", 0L))
+      .toDF("url", "url_hash", "kind", "priority")
+    val out = ShardedSeen.confirmFlag(graft.plans.GraftPlanner.probeDedupe(frontier,
+      shards.toDF(), 2, ShardedSeen.DefaultMaxShardBufferRows), seen)
     val plan = planOf(out)
-    assert(plan.contains("CoGroup"), s"probe must be shard-cogrouped:\n${plan.take(800)}")
+    assert(plan.contains("ShardedProbe"), s"probe must be the ShardedProbe operator:\n${plan.take(800)}")
     assert(!plan.contains("BroadcastHashJoin") && !plan.contains("BroadcastExchange"),
       s"seen state must never broadcast:\n${plan.take(800)}")
     assert(plan.contains("ShuffledHashJoin") || plan.contains("SortMergeJoin"),
@@ -223,5 +226,30 @@ class PlanSpec extends SparkSpec {
     assert(plan.toLowerCase.contains("union"), "definitely-new path must bypass the join")
     // the exact join is fed by a filter on the probe flag (maybe-slice only)
     assert(plan.contains("__maybe"), plan.take(800))
+  }
+
+  test("Wave.run on a fresh session with no install call plans ShardedProbe") {
+    // the probe installs its planner strategy on the frontier's session:
+    // a newSession() (fresh experimental strategies), or any caller's
+    // session reaching Wave.run through SparkEntry.entry, plans the same
+    // operator as the crawl
+    import graft.seen.ShardedSeen
+    val fresh = spark.newSession()
+    import fresh.implicits._
+    val cfg = SynthConfig(nAccounts = 2, articlesPerAccount = 4, longTail = 10)
+    val r = Wave.run(fresh, 0,
+      frontier = Synth.seedFrontier(fresh, cfg).toDF(),
+      seenExact = Seq.empty[Long].toDF("url_hash"),
+      shards = ShardedSeen.emptyShards(fresh),
+      nShards = 2,
+      robots = Synth.robots(fresh, cfg).toDF(),
+      budgets = Synth.budgets(fresh, cfg).toDF(),
+      pagesIdx = Wave.pageIndex(Synth.pages(fresh, cfg).toDF()))
+    try {
+      val nodes = allNodes(r.decisions.queryExecution.executedPlan)
+      assert(nodes.exists(_.isInstanceOf[graft.plans.ShardedProbeExec]),
+        s"wave must plan the ShardedProbe operator:\n${nodes.head.treeString.take(1500)}")
+      assert(!nodes.exists(_.nodeName == "CoGroup"), "no cogroup fallback")
+    } finally r.cached.foreach(_.unpersist())
   }
 }

@@ -15,10 +15,6 @@ object TestSpark {
     .config("spark.ui.enabled", "false")
     .config("spark.sql.adaptive.enabled", "true")
     .getOrCreate()
-  // WaveSpec and friends exercise the production fast path (custom
-  // ShardedProbeExec); the cogroup twin is covered directly by
-  // SeenSpec/ShardedProbePlanSpec equality tests
-  graft.plans.GraftPlanner.install(spark)
 }
 
 abstract class SparkSpec extends AnyFunSuite {

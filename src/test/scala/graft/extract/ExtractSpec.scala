@@ -93,7 +93,7 @@ class ExtractSpec extends SparkSpec {
       .findFirstMatchIn(html).get.group(1)
     assert(body.startsWith("\n<p>") && body.endsWith("</p>\n"))
     import spark.implicits._
-    val got = Seq(html).toDF("text").select(Extract.bodyCol($"text")).as[String].head()
+    val got = Seq(html).toDF("text").select(BuiltinExtract.bodyCol($"text")).as[String].head()
     assert(got === body)
     assert(got.getBytes(UTF_8).sameElements(body.getBytes(UTF_8)))
   }
@@ -172,11 +172,11 @@ class ExtractSpec extends SparkSpec {
     val a = detailPages.select(
       col("url"),
       ExtractArticle(col("text")).as("f"),
-      Extract.titleCol(col("text")).as("title"),
-      Extract.bodyCol(col("text")).as("body"),
-      Extract.publishTsCol(col("text")).cast("long").as("pub"),
-      Extract.readCountCol(col("text")).as("rd"),
-      Extract.likeCountCol(col("text")).as("lk"))
+      BuiltinExtract.titleCol(col("text")).as("title"),
+      BuiltinExtract.bodyCol(col("text")).as("body"),
+      BuiltinExtract.publishTsCol(col("text")).cast("long").as("pub"),
+      BuiltinExtract.readCountCol(col("text")).as("rd"),
+      BuiltinExtract.likeCountCol(col("text")).as("lk"))
     a.collect().foreach { r =>
       val f = r.getStruct(r.fieldIndex("f"))
       assert(f.getString(0) === r.getString(r.fieldIndex("title")), r.getString(0))
@@ -190,7 +190,7 @@ class ExtractSpec extends SparkSpec {
       .collect().map(_.toSeq).toSet
     val viaBuiltins = detailPages.select(
       graft.url.UrlCanon.urlHashCol(col("url")).as("url_hash"),
-      posexplode(Extract.commentsCol(col("text"))).as(Seq("idx", "c")))
+      posexplode(BuiltinExtract.commentsCol(col("text"))).as(Seq("idx", "c")))
       .select(col("url_hash"), col("idx"), col("c.content"), col("c.nick_name"),
         col("c.like_num"), timestamp_seconds(col("c.create_time")))
       .collect().map(_.toSeq).toSet

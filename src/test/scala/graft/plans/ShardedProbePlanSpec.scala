@@ -1,7 +1,7 @@
 package graft.plans
 
 import graft.SparkSpec
-import graft.seen.ShardedSeen
+import graft.seen.{CogroupProbe, ShardedSeen}
 import org.apache.spark.sql.functions._
 
 /** The custom probe operator must be plan-visible, broadcast-free and
@@ -15,7 +15,6 @@ class ShardedProbePlanSpec extends SparkSpec {
       spark.range(0).selectExpr("id as url_hash"), cap, nShards)
 
   test("custom exec ≡ cogroup path: same rows, same winners, same flags") {
-    GraftPlanner.install(spark)
     val nShards = 4
     val seen = (1L to 400L).map(_ * 0x9e3779b97f4a7c15L)
     val shards = shardTable(seen, 2000, nShards).toDF()
@@ -29,7 +28,7 @@ class ShardedProbePlanSpec extends SparkSpec {
     }.toDF("url", "url_hash", "host", "biz", "kind", "wave", "priority", "discovered_ts")
 
     val fast = GraftPlanner.probeDedupe(frontier, shards, nShards, 1000000L)
-    val slow = ShardedSeen.probeDedupe(frontier,
+    val slow = CogroupProbe.probeDedupe(frontier,
       shards.as[graft.seen.SketchShard], nShards,
       prioIdx = frontier.schema.fieldIndex("priority"),
       kindIdx = frontier.schema.fieldIndex("kind"),
@@ -55,7 +54,6 @@ class ShardedProbePlanSpec extends SparkSpec {
   }
 
   test("buffer bound fails fast with an actionable message") {
-    GraftPlanner.install(spark)
     val shards = shardTable(Seq(1L), 100, 1).toDF()
     val frontier = (1L to 50L).map(i =>
       (s"u$i", i, "h", "b", "detail", 0, 0L, new java.sql.Timestamp(0L)))
@@ -67,7 +65,6 @@ class ShardedProbePlanSpec extends SparkSpec {
   }
 
   test("renamed/missing frontier column fails at plan construction, not execute") {
-    GraftPlanner.install(spark)
     val shards = shardTable(Seq(1L), 100, 1).toDF()
     val renamed = (1L to 5L).map(i =>
       (s"u$i", i, "h", "b", "detail", 0, 0L, new java.sql.Timestamp(0L)))
@@ -89,7 +86,6 @@ class ShardedProbePlanSpec extends SparkSpec {
   }
 
   test("works under whole-stage-codegen consumers and filters downstream") {
-    GraftPlanner.install(spark)
     val nShards = 2
     val seen = (1L to 50L).map(_ * 31L)
     val shards = shardTable(seen, 500, nShards).toDF()

@@ -127,7 +127,7 @@ class ShardedSeenSpec extends SparkSpec {
     // frontier: half dupes, half new, extra payload column
     val frontier = ((1L to 1500L) ++ (100001L to 101500L))
       .map(i => (i * 0x9e3779b9L, s"u$i")).toDF("url_hash", "url")
-    val got = ShardedSeen.notSeen(frontier, seen, shards, 4)
+    val got = CogroupProbe.notSeen(frontier, seen, shards, 4)
       .select("url_hash", "url").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     val want = frontier.join(seen, Seq("url_hash"), "left_anti")
       .collect().map(r => (r.getLong(0), r.getString(1))).toSet
@@ -135,24 +135,13 @@ class ShardedSeenSpec extends SparkSpec {
     assert(got.size === 1500)
   }
 
-  test("probeDedupe fails fast (actionable message) when a shard slice overruns its buffer bound") {
-    val shards = build(Seq(1L), 100, nShards = 1)
-    val frontier = (1L to 50L)
-      .map(i => (i, s"u$i", 0L, "detail")).toDF("url_hash", "url", "priority", "kind")
-    val probe = ShardedSeen.probeDedupe(frontier.coalesce(1), shards, nShards = 1,
-      prioIdx = 2, kindIdx = 3, urlIdx = 1, maxBufferRows = 10L)
-    val e = intercept[org.apache.spark.SparkException] { probe.count() }
-    assert(e.getMessage.contains("maxBufferRows") ||
-      Option(e.getCause).exists(_.getMessage.contains("maxBufferRows")))
-  }
-
   test("notSeen result is identical across parallelism (4 vs 1 partitions)") {
     val seen = (1L to 500L).map(_ * 31L).toDF("url_hash")
     val shards = build((1L to 500L).map(_ * 31L), 500, nShards = 4)
     val frontier = (1L to 2000L).map(i => (i * 31L, i)).toDF("url_hash", "id")
-    val a = ShardedSeen.notSeen(frontier.repartition(4), seen, shards, 4)
+    val a = CogroupProbe.notSeen(frontier.repartition(4), seen, shards, 4)
       .select("id").as[Long].collect().sorted.toSeq
-    val b = ShardedSeen.notSeen(frontier.coalesce(1), seen, shards, 4)
+    val b = CogroupProbe.notSeen(frontier.coalesce(1), seen, shards, 4)
       .select("id").as[Long].collect().sorted.toSeq
     assert(a === b)
   }
@@ -172,7 +161,7 @@ class ShardedSeenSpec extends SparkSpec {
     // exact table still lists them (the seen-keys view excludes them)
     val frontier = retractKeys.map(h => (h, s"u$h")).toDF("url_hash", "url")
     val stillSeen = keys.toDF("url_hash") // stale exact table
-    val out = ShardedSeen.notSeen(frontier, stillSeen, retracted, 4)
+    val out = CogroupProbe.notSeen(frontier, stillSeen, retracted, 4)
     assert(out.count() === 100, "cuckoo delete must route around the exact join")
     // re-fetch re-inserts → seen again
     val reinserted = ShardedSeen.updatedShards(retracted,
