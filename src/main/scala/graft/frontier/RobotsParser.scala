@@ -48,8 +48,11 @@ object RobotsParser {
               // PREFIX (RFC 9309 product tokens), not substring — a group
               // for an unrelated bot whose name merely appears inside this
               // agent ('bot' vs 'graftbot') must not count as specific and
-              // silently suppress the `*` group's Disallow rules
-              else if (a.nonEmpty && (a == wanted || wanted.startsWith(a))) {
+              // silently suppress the `*` group's Disallow rules. The
+              // prefix must end at a token boundary of the agent ('graft'
+              // names 'graft-news' or 'graft/1.0', never 'graftbot')
+              else if (a.nonEmpty && wanted.startsWith(a) &&
+                  (a.length == wanted.length || !wanted.charAt(a.length).isLetterOrDigit)) {
                 groupSpecific = true
                 sawSpecificGroup = true
               }

@@ -35,7 +35,9 @@ import org.apache.spark.sql.types._
   * Both kernels take `array<float>` input and keep the repo's
   * loud-null malformed-input contract (null input / null element /
   * length mismatch → null, never a silently-wrong score — same as
-  * [[DotMatrix]]). Interpreted eval and generated code share one
+  * [[DotMatrix]]). A zero-norm vector is null too, not the NaN of 0/0
+  * (Spark orders NaN above every real score, so a top-k would rank
+  * it first). Interpreted eval and generated code share one
   * static method; the call stays inside whole-stage codegen.
   *
   *   - [[CosineF32]]: cosine of two float-array COLUMNS (the pairwise
@@ -115,22 +117,8 @@ object CosineF32 {
     true
   }
 
-  /** Plain-Scala reference of the f32 loop over two float arrays —
-    * shared by both kernels and usable from specs as the independent
-    * replay. */
-  def cosineF32(x: Array[Float], y: Array[Float]): Double = {
-    var dot = 0.0f; var nx = 0.0f; var ny = 0.0f
-    var i = 0
-    while (i < x.length) {
-      val a = x(i); val b = y(i)
-      dot += a * b; nx += a * a; ny += b * b
-      i += 1
-    }
-    (dot / (math.sqrt(nx.toDouble).toFloat * math.sqrt(ny.toDouble).toFloat)).toDouble
-  }
-
-  /** Pairwise kernel body (null = malformed: length mismatch or null
-    * element — LOUD, never silently wrong). */
+  /** Pairwise kernel body (null = malformed: length mismatch, null
+    * element or a zero-norm side — LOUD, never silently wrong). */
   def cosine(a: ArrayData, b: ArrayData): java.lang.Double = {
     val d = a.numElements()
     if (!wellFormed(b, d) || !wellFormed(a, d)) return null
@@ -141,13 +129,14 @@ object CosineF32 {
       dot += x * y; nx += x * x; ny += y * y
       i += 1
     }
-    java.lang.Double.valueOf(
-      (dot / (math.sqrt(nx.toDouble).toFloat * math.sqrt(ny.toDouble).toFloat)).toDouble)
+    val den = math.sqrt(nx.toDouble).toFloat * math.sqrt(ny.toDouble).toFloat
+    if (den == 0.0f) null else java.lang.Double.valueOf((dot / den).toDouble)
   }
 
   /** Matrix kernel body: one f32 cosine per matrix row, row order
     * preserved. The embedding's own norm accumulates once (the same
-    * float value the reference reaches per call, so reuse is exact). */
+    * float value the reference reaches per call, so reuse is exact).
+    * A zero norm on either side makes the whole array null. */
   def cosines(arr: ArrayData, m: Array[Array[Float]]): ArrayData = {
     val n = m.length
     val dim = m(0).length
@@ -167,7 +156,9 @@ object CosineF32 {
         dot += x * y; ny += y * y
         k += 1
       }
-      out(j) = (dot / (sqx * math.sqrt(ny.toDouble).toFloat)).toDouble
+      val den = sqx * math.sqrt(ny.toDouble).toFloat
+      if (den == 0.0f) return null
+      out(j) = (dot / den).toDouble
       j += 1
     }
     ArrayData.toArrayData(out)

@@ -2,6 +2,7 @@ package graft.multimodal
 
 import java.nio.charset.StandardCharsets.UTF_8
 
+import graft.model.Tables
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -94,7 +95,7 @@ object Multimodal {
     * full plumbing on driver testdata. */
   def assetsFromDocuments(spark: SparkSession, dir: String): Dataset[AssetRow] = {
     import spark.implicits._
-    spark.read.parquet(s"$dir/documents.parquet")
+    Tables.readSource(spark, dir, "documents")
       .select(col("doc_id").as("asset_id"),
         element_at(array(lit("image"), lit("audio"), lit("video")),
           (pmod(col("doc_id"), lit(3)) + 1).cast("int")).as("kind"),

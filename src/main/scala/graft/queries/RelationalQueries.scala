@@ -1,5 +1,7 @@
 package graft.queries
 
+import graft.functions.HllCountDistinct
+import graft.model.Tables.readSource
 import graft.url.UrlCanon
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
@@ -14,13 +16,10 @@ import org.apache.spark.sql.functions._
   */
 object RelationalQueries {
 
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // G1: hash aggregate with partial/final phases
     "q_agg_pricing" -> ((s, d) => {
-      t(s, d, "lineitem")
+      readSource(s, d, "lineitem")
         .groupBy(col("l_returnflag"), col("l_linestatus"))
         .agg(
           round(sum(col("l_quantity")), 2).as("sum_qty"),
@@ -30,7 +29,7 @@ object RelationalQueries {
 
     // G2: exact distinct counts
     "q_distinct_orders" -> ((s, d) => {
-      t(s, d, "lineitem")
+      readSource(s, d, "lineitem")
         .groupBy(col("l_returnflag"))
         .agg(
           count_distinct(col("l_orderkey")).as("n_orders"),
@@ -41,18 +40,22 @@ object RelationalQueries {
     // (exact count_distinct shuffles every key; the sketch doesn't).
     // Rows-only: HLL estimates differ across engines by construction;
     // RelationalSpec pins the <5% error bound against the exact count.
+    // HllCountDistinct equals approx_count_distinct(_, 0.01) value for
+    // value but keeps its 1,639 register words in one buffer field, so
+    // the aggregate is an ObjectHashAggregate, not a 3,278-field
+    // projection generated per task.
     "q_approx_distinct" -> ((s, d) => {
-      t(s, d, "lineitem")
+      readSource(s, d, "lineitem")
         .groupBy(col("l_returnflag"))
-        .agg(approx_count_distinct(col("l_orderkey"), 0.01).as("approx_orders"),
-          approx_count_distinct(col("l_partkey"), 0.01).as("approx_parts"))
+        .agg(HllCountDistinct(col("l_orderkey"), 0.01).as("approx_orders"),
+          HllCountDistinct(col("l_partkey"), 0.01).as("approx_parts"))
     }),
 
     // W1: per-key recency ranking (the frontier priority window)
     "q_recency_rank" -> ((s, d) => {
       val w = Window.partitionBy(col("o_custkey"))
         .orderBy(col("o_orderdate").desc, col("o_orderkey").asc)
-      t(s, d, "orders")
+      readSource(s, d, "orders")
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") <= 3)
         .select(col("o_custkey"), col("o_orderkey"), col("rn"))
@@ -62,7 +65,7 @@ object RelationalQueries {
     "q_budget_topk" -> ((s, d) => {
       val w = Window.partitionBy(col("o_orderpriority"))
         .orderBy(col("o_totalprice").desc, col("o_orderkey").asc)
-      t(s, d, "orders")
+      readSource(s, d, "orders")
         .withColumn("rk", row_number().over(w))
         .filter(col("rk") <= 5)
         .select(col("o_orderpriority"), col("o_orderkey"),
@@ -77,7 +80,7 @@ object RelationalQueries {
     // partial map-side aggregation — the exchange carries one row per
     // order key instead of every line, and there is no sort at all.
     "q_firstwins" -> ((s, d) => {
-      t(s, d, "lineitem")
+      readSource(s, d, "lineitem")
         .groupBy(col("l_orderkey"))
         .agg(min(struct(col("l_linenumber"), col("l_partkey"))).as("__m"))
         .select(col("l_orderkey"),
@@ -90,15 +93,15 @@ object RelationalQueries {
       val w = Window.partitionBy(col("user_id"))
         .orderBy(col("ts").asc, col("event_id").asc)
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-      t(s, d, "events")
+      readSource(s, d, "events")
         .withColumn("run_sum", round(sum(col("value")).over(w), 4))
         .select(col("event_id"), col("user_id"), col("run_sum"))
     }),
 
     // J1: the fetch equi-join shape (filter pushed below the join)
     "q_fetch_join" -> ((s, d) => {
-      val o = t(s, d, "orders").filter(col("o_orderstatus") === "F")
-      val l = t(s, d, "lineitem").filter(col("l_quantity") > 45)
+      val o = readSource(s, d, "orders").filter(col("o_orderstatus") === "F")
+      val l = readSource(s, d, "lineitem").filter(col("l_quantity") > 45)
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .select(col("l_orderkey"), col("l_linenumber"), col("o_custkey"),
           round(col("l_quantity"), 2).as("qty"))
@@ -106,8 +109,8 @@ object RelationalQueries {
 
     // J2: anti join (the seen-set dedupe shape)
     "q_anti_join" -> ((s, d) => {
-      t(s, d, "customer")
-        .join(t(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT"),
+      readSource(s, d, "customer")
+        .join(readSource(s, d, "orders").filter(col("o_orderpriority") === "1-URGENT"),
           col("c_custkey") === col("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"))
     }),
@@ -115,22 +118,25 @@ object RelationalQueries {
     // J4: semi join (the robots-allowed shape). r6 (guide §2.3): the r5
     // plan broadcast-built a hash relation over EVERY lineitem row;
     // distinct() first collapses the build side to the ~p_partkey key
-    // set with partial aggregation before anything is broadcast — same
-    // semi-join verdict per part row (membership is duplicate-blind).
+    // set with partial aggregation — same semi-join verdict per part row
+    // (membership is duplicate-blind). No broadcast hint: the key set
+    // grows with the big side, so the planner picks the join strategy
+    // from its size (a forced broadcast builds one in-memory hash
+    // relation over all of it, however large).
     "q_semi_join" -> ((s, d) => {
-      val keys = t(s, d, "lineitem").select(col("l_partkey")).distinct()
-      t(s, d, "part").filter(col("p_size") >= 25)
-        .join(broadcast(keys), col("p_partkey") === col("l_partkey"), "left_semi")
+      val keys = readSource(s, d, "lineitem").select(col("l_partkey")).distinct()
+      readSource(s, d, "part").filter(col("p_size") >= 25)
+        .join(keys, col("p_partkey") === col("l_partkey"), "left_semi")
         .select(col("p_partkey"), col("p_brand"))
     }),
 
     // J3: FK-chain lookup with broadcastable dims
     "q_fk_chain" -> ((s, d) => {
-      val l = t(s, d, "lineitem")
-      val o = t(s, d, "orders")
-      val c = t(s, d, "customer")
-      val n = broadcast(t(s, d, "nation"))
-      val r = broadcast(t(s, d, "region"))
+      val l = readSource(s, d, "lineitem")
+      val o = readSource(s, d, "orders")
+      val c = readSource(s, d, "customer")
+      val n = broadcast(readSource(s, d, "nation"))
+      val r = broadcast(readSource(s, d, "region"))
       l.join(o, col("l_orderkey") === col("o_orderkey"))
         .join(c, col("o_custkey") === col("c_custkey"))
         .join(n, col("c_nationkey") === col("n_nationkey"))
@@ -149,7 +155,7 @@ object RelationalQueries {
     // full-outer join, so merged/was_updated are unchanged.
     "q_upsert_merge" -> ((s, d) => {
       val cutoff = lit("1998-01-01").cast("timestamp")
-      t(s, d, "orders")
+      readSource(s, d, "orders")
         .groupBy(col("o_custkey"))
         .agg(
           round(sum(when(col("o_orderdate") < cutoff, col("o_totalprice"))), 2)
@@ -163,7 +169,7 @@ object RelationalQueries {
 
     // E1: union + key dedupe (frontier ∪ discovered)
     "q_union_dedupe" -> ((s, d) => {
-      val o = t(s, d, "orders")
+      val o = readSource(s, d, "orders")
       val a = o.filter(col("o_orderpriority") === "1-URGENT")
       val b = o.filter(col("o_totalprice") > 300000)
       a.unionByName(b)
@@ -173,14 +179,14 @@ object RelationalQueries {
 
     // E2: keyed except — urgent orders that are not high-value
     "q_except_orders" -> ((s, d) => {
-      val o = t(s, d, "orders")
+      val o = readSource(s, d, "orders")
       o.filter(col("o_orderpriority") === "1-URGENT").select(col("o_orderkey"))
         .except(o.filter(col("o_totalprice") > 200000).select(col("o_orderkey")))
     }),
 
     // S1/S2 composite: canonicalize a volatile-param URL built per row
     "q_url_canon" -> ((s, d) => {
-      t(s, d, "orders")
+      readSource(s, d, "orders")
         .withColumn("raw_url", concat(
           lit("https://HOST"), pmod(col("o_custkey"), lit(20)),
           lit(".example/s?__biz=BIZ"), col("o_custkey"),
@@ -190,7 +196,7 @@ object RelationalQueries {
 
     // S9: host extraction + per-host rollup
     "q_host_counts" -> ((s, d) => {
-      t(s, d, "orders")
+      readSource(s, d, "orders")
         .withColumn("raw_url", concat(
           lit("https://Host"), pmod(col("o_custkey"), lit(20)), lit(".example/p/"),
           col("o_orderkey")))
@@ -212,7 +218,7 @@ object RelationalQueries {
       val rules = Seq(
         ("/", true), ("/p1", false), ("/p12", true), ("/p3", false))
         .toDF("path_prefix", "allowed")
-      val urls = t(s, d, "orders")
+      val urls = readSource(s, d, "orders")
         .select(col("o_orderkey"),
           concat(lit("/p"), pmod(col("o_orderkey"), lit(20))).as("path"))
       urls.join(broadcast(rules), startswith(col("path"), col("path_prefix")))
@@ -230,10 +236,10 @@ object RelationalQueries {
     // disappears; count(o_orderkey)/sum over the left join's null row
     // ≡ coalesce(…, 0) on the missing aggregate.
     "q_seed_progress" -> ((s, d) => {
-      val perCust = t(s, d, "orders")
+      val perCust = readSource(s, d, "orders")
         .groupBy(col("o_custkey"))
         .agg(count(lit(1)).as("__n"), sum(col("o_totalprice")).as("__s"))
-      t(s, d, "customer")
+      readSource(s, d, "customer")
         .join(perCust, col("c_custkey") === col("o_custkey"), "left")
         .select(col("c_custkey"),
           coalesce(col("__n"), lit(0L)).as("n_orders"),
@@ -248,7 +254,7 @@ object RelationalQueries {
     // aggregation in one exchange instead of two full window sorts +
     // a groupBy over the ranked rows.
     "q_recrawl_update" -> ((s, d) => {
-      t(s, d, "events")
+      readSource(s, d, "events")
         .groupBy(col("user_id"))
         .agg(
           round(min(struct(col("ts"), col("event_id"), col("value")))
@@ -260,14 +266,14 @@ object RelationalQueries {
 
     // S5: JSON payload extraction (the read/like-count shape)
     "q_json_extract" -> ((s, d) => {
-      t(s, d, "events")
+      readSource(s, d, "events")
         .select(col("event_id"),
           get_json_object(col("props"), "$.k").cast("int").as("k_val"))
     }),
 
     // S7: time conversion to epoch + hour bucketing
     "q_time_convert" -> ((s, d) => {
-      t(s, d, "events")
+      readSource(s, d, "events")
         .select(col("event_id"),
           unix_timestamp(col("ts")).as("epoch_s"),
           unix_timestamp(date_trunc("hour", col("ts"))).as("hour_epoch"))

@@ -1,5 +1,6 @@
 package graft.queries
 
+import graft.model.Tables.readSource
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
@@ -16,9 +17,6 @@ import org.apache.spark.sql.types.LongType
   * with semantics pinned by ScalaTest on planted near-duplicates.
   */
 object TextQueries {
-
-  private def t(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
 
   /** Cosine similarity of two float-array columns via higher-order
     * functions — codegen-friendly, no UDF (SURVEY prompt: similarity
@@ -75,7 +73,7 @@ object TextQueries {
     // 64-bit collision (the keeper/copies/len aggregates never need the
     // text itself).
     "q_dedup_exact" -> ((s, d) => {
-      t(s, d, "documents")
+      readSource(s, d, "documents")
         .select(col("doc_id"), xxhash64(col("text")).as("__h"),
           length(col("text")).as("__len"))
         .groupBy(col("__h"))
@@ -89,7 +87,7 @@ object TextQueries {
     // identical, TextKernelsSpec); the grouping/shuffle shape is unchanged
     "q_dedup_norm" -> ((s, d) => {
       val norm = graft.functions.TextKernels2.normalizeAscii(lower(col("text")))
-      t(s, d, "documents")
+      readSource(s, d, "documents")
         .select(col("doc_id"), xxhash64(norm).as("__h"), length(norm).as("__len"))
         .groupBy(col("__h"))
         .agg(min(col("doc_id")).as("keeper"), count(lit(1)).as("copies"),
@@ -101,35 +99,35 @@ object TextQueries {
     // bucket id per band (near-dup candidates share a bucket). Spark-only
     // (xxhash64 signatures) → rows-only oracle; pair semantics pinned in
     // DedupSpec on planted near-dups.
-    "q_minhash_lsh" -> ((s, d) => minhashBands(t(s, d, "documents"))),
+    "q_minhash_lsh" -> ((s, d) => minhashBands(readSource(s, d, "documents"))),
 
     // the product a dedup user actually consumes: distinct candidate
     // PAIRS sharing ≥1 minhash band bucket (bucket→pair join, oversized
     // buckets capped — same machinery as the ANN path). Rows-only
     // (xxhash64 buckets are Spark-specific); recall on planted near-dups
     // pinned in DedupSpec.
-    "q_minhash_pairs" -> ((s, d) => minhashPairs(t(s, d, "documents"))),
+    "q_minhash_pairs" -> ((s, d) => minhashPairs(readSource(s, d, "documents"))),
 
     // 64-bit SimHash per document from token hashes
-    "q_simhash64" -> ((s, d) => simhash(t(s, d, "documents"))),
+    "q_simhash64" -> ((s, d) => simhash(readSource(s, d, "documents"))),
 
     // SimHash over an MD5 token-hash family (portable twin of
     // q_simhash64): the bit-vote algorithm itself carries a full DuckDB
     // oracle check while q_simhash64 stays the cheap xxhash64 production
     // variant (round-4 verdict stretch, same split as q_winnow_md5)
-    "q_simhash_md5" -> ((s, d) => simhashMd5(t(s, d, "documents"))),
+    "q_simhash_md5" -> ((s, d) => simhashMd5(readSource(s, d, "documents"))),
 
     // minhash banding over an MD5 signature family (portable twin of
     // q_minhash_lsh, same shingle / 16-sig / 8x2 banding): lexicographic
     // min over md5 hex strings — every step ANSI-SQL-expressible, so the
     // signature+banding pipeline is oracle-checked, not just rows-only
-    "q_minhash_md5" -> ((s, d) => minhashBandsMd5(t(s, d, "documents"))),
+    "q_minhash_md5" -> ((s, d) => minhashBandsMd5(readSource(s, d, "documents"))),
 
     // candidate PAIRS from the md5 banding incl. the oversized-bucket
     // cap — oracle-checks the bucket→pair join machinery that
     // q_minhash_pairs / q_embed_neardup run under Spark-only hashes
     "q_lsh_pairs_md5" -> ((s, d) =>
-      annCandidatePairs(minhashBandsMd5(t(s, d, "documents"))
+      annCandidatePairs(minhashBandsMd5(readSource(s, d, "documents"))
         .withColumnRenamed("doc_id", "vec_id"))),
 
     // token-set Jaccard for deterministic candidate pairs (doc, doc+1).
@@ -141,7 +139,7 @@ object TextQueries {
     // becomes a join key at all (the old design's skew concern is moot
     // when the join key is the unique doc id).
     "q_ngram_jaccard" -> ((s, d) => {
-      val docs = t(s, d, "documents")
+      val docs = readSource(s, d, "documents")
       val sets = docs.select(col("doc_id"),
         array_distinct(split(col("text"), "\\s+")).as("__tk"))
       sets.as("s1")
@@ -163,7 +161,7 @@ object TextQueries {
     // interpreted zip_with/aggregate lambdas; oracle-checked, so the
     // kernel is the f32 oracle replica (see cosineToQueryF32Col).
     "q_embed_threshold" -> ((s, d) => {
-      brutCos(t(s, d, "embeddings"), graft.functions.CosineF32(_, _), cosineToQueryF32Col)
+      brutCos(readSource(s, d, "embeddings"), graft.functions.CosineF32(_, _), cosineToQueryF32Col)
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
         .filter(col("cos_sim") >= 0.25)
     }),
@@ -171,7 +169,7 @@ object TextQueries {
     // brute-force top-k (rows-only: k-boundary float ties are not
     // oracle-stable; correctness pinned in SimilaritySpec)
     "q_embed_topk" -> ((s, d) => {
-      brutCos(t(s, d, "embeddings"), cosineCol, cosineToQueryCol)
+      brutCos(readSource(s, d, "embeddings"), cosineCol, cosineToQueryCol)
         .orderBy(col("cos_raw").desc, col("vec_id").asc)
         .limit(10)
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
@@ -183,7 +181,7 @@ object TextQueries {
     // passing q_embed_threshold oracle already proves the round-4
     // scores match), unlike the raw-float k-boundary ties above
     "q_embed_topk_r4" -> ((s, d) => {
-      brutCos(t(s, d, "embeddings"), graft.functions.CosineF32(_, _), cosineToQueryF32Col)
+      brutCos(readSource(s, d, "embeddings"), graft.functions.CosineF32(_, _), cosineToQueryF32Col)
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id").asc)
         .limit(10)
@@ -194,13 +192,13 @@ object TextQueries {
     // banding. At N=10^10 a single 8-bit band meant ~N/256 vectors per
     // bucket (quadratic within-bucket join); 16-bit bands keep buckets
     // ~N/65536 per band and the cap below bounds the worst case.
-    "q_ann_lsh_bucket" -> ((s, d) => annBuckets(t(s, d, "embeddings"))),
+    "q_ann_lsh_bucket" -> ((s, d) => annBuckets(readSource(s, d, "embeddings"))),
 
     // IVF coarse-quantizer ANN (the data-adaptive scale path next to
     // the data-independent LSH above; see [[Ivf]]). Rows-only: the
     // centroid sample is xxhash64-seeded (Spark-specific); assignment
     // determinism + recall vs brute force are pinned in IvfSpec.
-    "q_ann_ivf_assign" -> ((s, d) => Ivf.assign(t(s, d, "embeddings"))),
+    "q_ann_ivf_assign" -> ((s, d) => Ivf.assign(readSource(s, d, "embeddings"))),
     // oracle-checkable TWIN of q_ann_ivf_assign: same coarse-quantizer
     // semantics (cell = argmax cosine over K centroids, lowest cell id
     // on ties — [[Ivf]] normalizes its centroids, so its argmax-DOT is
@@ -218,7 +216,7 @@ object TextQueries {
     // ([[graft.functions.CosineF32.toMatrix]]) and each round(.,4)
     // equals the oracle's bitwise.
     "q_ann_ivf_assign_r4" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
+      val e = readSource(s, d, "embeddings")
       val cRows = e.filter(col("vec_id").between(1, 16))
         .select(col("vec_id").cast("int").as("cid"), col("embedding"))
         .collect().sortBy(_.getInt(0))
@@ -253,14 +251,14 @@ object TextQueries {
     // scan of nprobe cells (round-3 verdict: the registered plan must
     // be the scale path, not a per-query corpus-wide reassignment)
     "q_ann_ivf_topk" -> ((s, d) =>
-      Ivf.indexedTopK(s, t(s, d, "embeddings"), cacheKey = s"$d/embeddings.parquet")),
+      Ivf.indexedTopK(s, readSource(s, d, "embeddings"), cacheKey = s"$d/embeddings.parquet")),
 
     // embedding-cosine near-dup pairs: candidates from the banded-bucket
     // self-join, deduped across bands, oversized buckets capped, then
     // verified with exact cosine. Rows-only: hash buckets are Spark-
     // specific; recall pinned in SimilaritySpec on planted near-dups.
     "q_embed_neardup" -> ((s, d) => {
-      val e = t(s, d, "embeddings")
+      val e = readSource(s, d, "embeddings")
       val pairs = annCandidatePairs(annBuckets(e))
       // r6: each side's norm is computed once at the (small) join input
       // instead of once per candidate pair — same arithmetic as
@@ -289,7 +287,7 @@ object TextQueries {
     // which is the same boundedness contract the production path gets
     // from its per-bucket cap.
     "q_embed_neardup_exact" -> ((s, d) => {
-      val e = t(s, d, "embeddings").filter(col("vec_id") % 10 === 0)
+      val e = readSource(s, d, "embeddings").filter(col("vec_id") % 10 === 0)
       // oracle-checked → the pair cosine is the f32 oracle replica
       // ([[graft.functions.CosineF32]]), one fused codegen kernel per
       // pair. The f64 formulation (and its r6 norm hoist) rounded to a
@@ -308,7 +306,7 @@ object TextQueries {
 
     // ---- text analysis ---------------------------------------------
     "q_lang_id" -> ((s, d) => {
-      t(s, d, "documents").select(col("doc_id"), langIdCol(col("text")).as("lang_pred"))
+      readSource(s, d, "documents").select(col("doc_id"), langIdCol(col("text")).as("lang_pred"))
     }),
 
     "q_text_quality" -> ((s, d) => {
@@ -316,7 +314,7 @@ object TextQueries {
       val nTok = size(toks)
       val nStop = size(filter(toks, x => x.isin(Stopwords: _*)))
       val alnum = length(regexp_replace(col("text"), "[^a-zA-Z0-9]", ""))
-      t(s, d, "documents").select(
+      readSource(s, d, "documents").select(
         col("doc_id"),
         nTok.as("n_tokens"),
         round(alnum.cast("double") / greatest(nTok, lit(1)), 4).as("avg_tok_len"),
@@ -327,30 +325,30 @@ object TextQueries {
     }),
 
     "q_token_count" -> ((s, d) => {
-      t(s, d, "documents").select(
+      readSource(s, d, "documents").select(
         col("doc_id"),
         size(split(trim(col("text")), "\\s+")).as("n_ws_tokens"),
         ceil(length(col("text")).cast("double") / 4.0).cast(LongType).as("n_bpeish"))
     }),
 
     "q_fingerprint_md5" -> ((s, d) => {
-      t(s, d, "documents").select(col("doc_id"), md5(col("text")).as("fp"))
+      readSource(s, d, "documents").select(col("doc_id"), md5(col("text")).as("fp"))
     }),
 
     // rolling Karp-Rabin winnowing fingerprints — Spark-only (integer
     // rolling hash not SQL-portable), rows-only + TextSpec
-    "q_fingerprint_winnow" -> ((s, d) => winnow(t(s, d, "documents"))),
+    "q_fingerprint_winnow" -> ((s, d) => winnow(readSource(s, d, "documents"))),
 
     // winnowing over an MD5 signature family: identical window/min
     // semantics, but the gram hash is md5 (portable) instead of the
     // Karp-Rabin long — so DuckDB replays the EXACT fingerprints and the
     // winnowing algorithm itself is oracle-checked, not just rows-only
     // (round-4 verdict stretch: pin a signature family SQL can express)
-    "q_winnow_md5" -> ((s, d) => winnowMd5(t(s, d, "documents"))),
+    "q_winnow_md5" -> ((s, d) => winnowMd5(readSource(s, d, "documents"))),
 
     // ---- multimodal plumbing ----------------------------------------
     "q_multimodal_meta" -> ((s, d) => {
-      t(s, d, "documents").select(
+      readSource(s, d, "documents").select(
         col("doc_id"),
         octet_length(col("text")).as("n_bytes"),
         substring(col("text"), 1, 8).as("header"),

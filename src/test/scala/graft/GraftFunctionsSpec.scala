@@ -183,4 +183,35 @@ class GraftFunctionsSpec extends SparkSpec {
       graft.functions.CosineF32.toMatrix(col("x"), Seq(Seq(1f, 2f), Seq(3f)))
     }
   }
+
+  test("CosineF32 zero-norm vector: null, never NaN, both eval paths") {
+    import spark.implicits._
+    val zero = Seq(0f, 0f, 0f)
+    val rows: Seq[(Long, Seq[Float], Seq[Float])] = Seq(
+      (1L, Seq(1f, 2f, 3f), Seq(4f, 5f, 6f)),
+      (2L, zero, Seq(4f, 5f, 6f)), // zero left side
+      (3L, Seq(1f, 2f, 3f), zero), // zero right side
+      (4L, zero, zero),
+      (5L, Seq(1e-30f, 0f, 0f), Seq(4f, 5f, 6f))) // squares underflow to 0 in f32
+    def check(df: org.apache.spark.sql.DataFrame): Unit = {
+      val got = df.select(col("id"),
+        graft.functions.CosineF32(col("x"), col("y")).as("c"),
+        graft.functions.CosineF32.toMatrix(col("x"), Seq(Seq(1f, 2f, 3f))).as("cm"),
+        graft.functions.CosineF32.toMatrix(col("y"), Seq(zero)).as("cz"))
+        .collect().sortBy(_.getLong(0))
+      assert(got(0).getDouble(1) === cosF32Replay(Seq(1f, 2f, 3f), Seq(4f, 5f, 6f)))
+      assert(!got(0).isNullAt(2))
+      Seq(1, 3, 4).foreach { i =>
+        assert(got(i).isNullAt(1), s"id ${i + 1}: zero-norm left side must null cosine")
+        assert(got(i).isNullAt(2), s"id ${i + 1}: zero-norm embedding must null the matrix row")
+      }
+      assert(got(2).isNullAt(1), "id 3: zero-norm right side must null cosine")
+      assert(!got(2).isNullAt(2), "id 3: the embedding side is well-formed")
+      assert(got.forall(_.isNullAt(3)), "a zero-norm matrix row must null the array")
+    }
+    check(rows.toDF("id", "x", "y")) // LocalTableScan → interpreted eval
+    val dir = java.nio.file.Files.createTempDirectory("cosf32-zero").toString
+    rows.toDF("id", "x", "y").write.mode("overwrite").parquet(dir)
+    check(spark.read.parquet(dir)) // parquet scan → codegen path
+  }
 }

@@ -252,4 +252,27 @@ class PlanSpec extends SparkSpec {
       assert(!nodes.exists(_.nodeName == "CoGroup"), "no cogroup fallback")
     } finally r.cached.foreach(_.unpersist())
   }
+
+  test("no battery query plans an aggregate buffer wider than 64 fields") {
+    // a wide buffer cannot codegen and costs a generated projection over
+    // every field per task — approx_count_distinct at rsd 0.01 is 1,639
+    // LongType fields; the one-field HllCountDistinct replaces it
+    import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
+    val wide = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (q, f) =>
+      allNodes(f(spark, sf).queryExecution.executedPlan).collect {
+        case a: BaseAggregateExec =>
+          a.aggregateExpressions.flatMap(_.aggregateFunction.aggBufferAttributes).size
+      }.filter(_ > 64).map(w => s"$q: $w buffer fields")
+    }
+    assert(SparkEntry.queries.size === 46)
+    assert(wide.isEmpty, wide.distinct.mkString("; "))
+  }
+
+  test("q_semi_join: no broadcast hint, the planner sizes the key set") {
+    import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
+    val df = SparkEntry.queries("q_semi_join")(spark, sf)
+    val hints = df.queryExecution.analyzed.collect { case h: ResolvedHint => h }
+    assert(hints.isEmpty, s"analyzed plan carries hints: $hints")
+    assert(planOf(df).contains("LeftSemi"))
+  }
 }

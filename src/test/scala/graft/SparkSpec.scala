@@ -17,6 +17,11 @@ object TestSpark {
     .getOrCreate()
 }
 
+/** The generated sf source tables, one directory per scale (TESTDATA.md). */
+object TestData {
+  val root = "/root/testdata"
+}
+
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = {
     val s = TestSpark.spark

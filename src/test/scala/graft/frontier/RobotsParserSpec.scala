@@ -72,9 +72,27 @@ class RobotsParserSpec extends SparkSpec {
     assert(!r.exists(_.path_prefix == "/other"))
     // a true token PREFIX does match (RFC 9309 product-token matching)
     val t2 = "User-agent: graft\nAllow: /mine\n\nUser-agent: *\nDisallow: /\n"
-    val r2 = RobotsParser.parse("h", t2, agent = "graftbot")
+    val r2 = RobotsParser.parse("h", t2, agent = "graft-news")
     assert(r2.contains(graft.model.RobotsRule("h", "/mine", true)))
     assert(!r2.exists(r => !r.allowed), "prefix-matched group replaces *")
+  }
+
+  test("specific-group prefix must end at a token boundary of the agent") {
+    val star = "User-agent: *\nDisallow: /\n"
+    // 'g' and 'graft' are prefixes of 'graftbot' but not tokens of it:
+    // the * group's Disallow must still apply
+    Seq("g", "graft", "graftbo").foreach { ua =>
+      val r = RobotsParser.parse("h", s"User-agent: $ua\nAllow: /other\n\n$star", agent = "graftbot")
+      assert(r.contains(graft.model.RobotsRule("h", "/", false)), s"'$ua' must not suppress *")
+      assert(!r.exists(_.path_prefix == "/other"), s"'$ua' must not count as specific")
+    }
+    // exact name, and a prefix ending at '/', '-' or ' ' of the agent, do match
+    Seq("graftbot" -> "graftbot", "graftbot" -> "GraftBot/2.1",
+        "graft" -> "graft-bot", "graftbot" -> "graftbot crawler").foreach { case (ua, agent) =>
+      val r = RobotsParser.parse("h", s"User-agent: $ua\nAllow: /mine\n\n$star", agent = agent)
+      assert(r.contains(graft.model.RobotsRule("h", "/mine", true)), s"'$ua' must name '$agent'")
+      assert(!r.exists(r => !r.allowed), s"'$ua' must replace * for '$agent'")
+    }
   }
 
   test("parsed rules drive the wave gate with longest-prefix-wins") {
