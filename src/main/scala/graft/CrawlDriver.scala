@@ -84,9 +84,9 @@ object CrawlDriver {
     * (one row per seen key, last fetch wins, active retractions applied
     * — see [[compactedFetched]]) plus the delta tail after it; the plain
     * delta union before any compaction. Every whole-history consumer
-    * (seen keys, telemetry backfill, counts) reads through this view, so
-    * [[graft.checkpoint.Expiry]] can physically delete the folded
-    * deltas. */
+    * (seen keys, the fetched-log compaction, counts) reads through this
+    * view, so [[graft.checkpoint.Expiry]] can physically delete the
+    * folded deltas. */
   private[graft] def fetchedView(catalog: SnapshotCatalog, k: Int): DataFrame =
     catalog.readWithBase(k, "fetched", "fetched_base")
 
@@ -187,13 +187,12 @@ object CrawlDriver {
       pagesIdx: DataFrame,
       k: Int,
       cfg: RunConfig,
-      constants: Option[(DataFrame, DataFrame)]): (Wave.WaveResult, DataFrame) = {
+      robots: DataFrame,
+      budgets: DataFrame): (Wave.WaveResult, DataFrame) = {
     import spark.implicits._
     val frontier = catalog.readTable(k, "frontier")
     val seenExact = seenKeys(catalog, k)
     val shards = catalog.readTable(k, "seen_sketch").as[SketchShard]
-    val (robots, budgets) = constants.getOrElse(
-      (catalog.readTable(0, "robots"), catalog.readTable(0, "budgets")))
     val waveBudgets =
       if (cfg.carryBudgets) effectiveBudgets(budgets, budgetState(catalog, k))
       else budgets
@@ -208,7 +207,7 @@ object CrawlDriver {
   }
 
   private def waveTables(r: Wave.WaveResult, newShards: DataFrame, cfg: RunConfig,
-      budgetStateNext: Option[DataFrame] = None)
+      budgetStateNext: Option[DataFrame])
       : (Map[String, DataFrame], Map[String, DataFrame]) = (
     Map( // loop-critical: what wave k+1 reads
       "frontier" -> r.frontierNext,
@@ -225,45 +224,6 @@ object CrawlDriver {
       "denied" -> r.denied.select("url_hash", "url", "host")
         .dropDuplicates("url_hash"),
       "metrics" -> Wave.metrics(cfg.runId, r.ledger)))
-
-  /** Run wave k (reading snapshot k, committing snapshot k+1),
-    * synchronously. Returns (fetched, extracted, frontierNext) counts.
-    * The resumable loop ([[run]]) uses the pipelined path instead. */
-  def runWave(
-      spark: SparkSession,
-      catalog: SnapshotCatalog,
-      pagesIdx: DataFrame,
-      k: Int,
-      cfg: RunConfig,
-      /** snapshot-0 constants — pass from [[run]] so the per-wave driver
-        * path doesn't re-open their parquet footers every wave. */
-      constants: Option[(DataFrame, DataFrame)] = None): (Long, Long, Long) = {
-    val t0 = System.nanoTime()
-    requireShardConfig(catalog, cfg)
-    val (r, newShards) = prepareWave(spark, catalog, pagesIdx, k, cfg, constants)
-    val planMs = (System.nanoTime() - t0) / 1000000L
-    // `fetched` is written FIRST and alone (commit warmFirst): its scan
-    // of the decision chain materializes the probe → confirm → decisions
-    // caches in one pass, so the five concurrent writes that follow read
-    // warm cache blocks instead of racing on uncomputed-partition locks.
-    // A useful write doubles as the warm-up — no standalone count job.
-    val budgets0 = constants.map(_._2).getOrElse(catalog.readTable(0, "budgets"))
-    val stateNext =
-      if (cfg.carryBudgets)
-        Some(nextBudgetState(budgets0, budgetState(catalog, k), r.fetched))
-      else None
-    val (loop, bulk) = waveTables(r, newShards, cfg, stateNext)
-    val counts = catalog.commit(k + 1, wave = k, tables = loop ++ bulk,
-      meta = Map("run_id" -> cfg.runId, "plan_ms" -> planMs.toString),
-      warmFirst = Some("fetched"))
-    val fetched = counts("fetched")
-    val extracted = counts("articles_delta")
-    r.cached.foreach(_.unpersist())
-    val totalMs = (System.nanoTime() - t0) / 1000000L
-    System.err.println(s"[wave $k] wall=${totalMs}ms (plan=${planMs}ms) " +
-      s"fetched=$fetched extracted=$extracted")
-    (fetched, extracted, counts("frontier"))
-  }
 
   /** Resume-aware PIPELINED loop: picks up from the latest committed
     * snapshot and stops early when the frontier drains.
@@ -288,7 +248,6 @@ object CrawlDriver {
     requireShardConfig(catalog, cfg)
     val robots0 = catalog.readTable(0, "robots")
     val budgets0 = catalog.readTable(0, "budgets")
-    val constants = Some((robots0, budgets0))
     // pick the robots join regime ONCE per run: broadcast for small rule
     // sets (rides the frontier scan stage), host-keyed shuffle join for
     // Common-Crawl-sized ones (multi-GB aggregated rules table cannot
@@ -306,7 +265,8 @@ object CrawlDriver {
     while (k < cfg.nWaves && frontierRows != 0L) {
       val t0 = System.nanoTime()
       // plans + chain warm-up — overlaps the PREVIOUS commit's bulk phase
-      val (r, newShards) = prepareWave(spark, catalog, pagesIdx, k, effCfg, constants)
+      val (r, newShards) = prepareWave(spark, catalog, pagesIdx, k, effCfg,
+        robots0, budgets0)
       val planMs = (System.nanoTime() - t0) / 1000000L
       spark.sparkContext.setJobDescription(s"wave-$k/chain-warm")
       // warming frontierNext materializes the whole decision chain (its
@@ -424,25 +384,7 @@ object CrawlDriver {
     val nWaves = args.lift(1).map(_.toInt).getOrElse(4)
     val dir = args.lift(2).getOrElse(
       java.nio.file.Files.createTempDirectory("graft-crawl").toString)
-    val cpus = HostFit.cores.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-crawl")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // AQE off for the crawl loop: its partitioning is explicit and
-      // data-derived (host-salted buckets, shard cogroups, hash-
-      // partitioned page index); AQE's runtime coalescing of those
-      // deliberately-sized partitions measured +33% task time and a
-      // 45s GC surge at local[16] (see Bench.session scaladoc)
-      .config("spark.sql.adaptive.enabled", "false")
-      // the per-wave frontier slice is always tiny next to the pages
-      // table: broadcast it instead of shuffling the whole page index
-      // to disk (at cluster scale the same join is a bucketed SMJ)
-      .config("spark.sql.autoBroadcastJoinThreshold", "128m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = HostFit.session("graft-crawl")
 
     val synthCfg = SynthConfig.forTargetRows(nPages)
     // the corpus includes each host's /robots.txt page — the crawl
@@ -476,45 +418,6 @@ object CrawlDriver {
       .articles(catalog, catalog.latest.get).count()
     val totalSeen = seenKeys(catalog, catalog.latest.get).count()
     println(s"[crawl] done: snapshots=${catalog.latest.get} articles=$totalArticles seen=$totalSeen dir=$dir")
-
-    // streaming telemetry over the run's OWN committed output (R3/R4
-    // wired to real crawl events — StreamingSpec pins the semantics;
-    // this is the operator-facing view): replay the fetched deltas
-    // through the watermarked tumbling rollup and print the busiest
-    // closed windows. GRAFT_TELEMETRY=0 to skip.
-    if (sys.env.getOrElse("GRAFT_TELEMETRY", "1") == "1") {
-      // nothing is collected to the driver (round-4 verdict #5): the
-      // committed `fetched` deltas replay through a FILE-based streaming
-      // source (one file per micro-batch, commit order), exactly the
-      // production feed shape — a live deployment points the same query
-      // at the directory the fetch tier appends to. Event time is the
-      // historical publish time (a BACKFILL — see eventStream doc), so
-      // under the default 120 s watermark out-of-order stragglers drop
-      // as late; that is the watermark's late-data policy, disclosed
-      // (StreamingSpec pins exact batch equality under a spread-covering
-      // delay). Windows whose end the watermark never passes stay open;
-      // with fewer than two distinct event timestamps nothing can close,
-      // so skip the replay instead of printing an empty rollup
-      // (round-4 advice #5).
-      val distinctTs = graft.streaming.StreamingMetrics
-        .eventsFromCatalog(catalog, spark)
-        .select(count_distinct(col("fetch_ts"))).head.getLong(0)
-      if (distinctTs < 2) {
-        println(s"[telemetry] skipped: $distinctTs distinct event timestamp(s) — " +
-          "no window can close under a watermark")
-      } else {
-        val stream = graft.streaming.StreamingMetrics.eventStream(catalog, spark)
-        val q = graft.streaming.StreamingMetrics.windowed(stream, windowSec = 3600)
-          .writeStream.format("memory").queryName("crawl_telemetry")
-          .outputMode("append").start()
-        try q.processAllAvailable() finally q.stop()
-        val top = spark.table("crawl_telemetry")
-          .orderBy(col("fetched_extracted").desc, col("win_start").asc, col("host").asc)
-          .limit(5).collect()
-        println(s"[telemetry] closed (window,host) rows=${spark.table("crawl_telemetry").count()}; busiest:")
-        top.foreach(r => println(s"[telemetry]   ${r.mkString(" | ")}"))
-      }
-    }
 
     // storage maintenance, AFTER all consumers (Iceberg-style expire
     // between runs, never on the wave path): physically reclaim

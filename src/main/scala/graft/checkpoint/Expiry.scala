@@ -30,8 +30,8 @@ package graft.checkpoint
   *     tail only (gated by ArticleStoreSpec's inputFiles check).
   *
   * WHAT is forfeited — exactly Iceberg's trade: time travel to expired
-  * snapshots (historical `articles(catalog, oldK)` views, full-history
-  * telemetry backfill). Kill/resume, never-fetch-twice, the replay gate
+  * snapshots (historical `articles(catalog, oldK)` views, the full
+  * fetched history). Kill/resume, never-fetch-twice, the replay gate
   * from the latest snapshot, and the merged article view are all
   * unaffected (ExpirySpec proves each against an un-expired twin).
   *
@@ -75,8 +75,7 @@ object Expiry {
     * manifest never landed (Iceberg's `remove_orphan_files` analogue —
     * [[expire]] reclaims SUPERSEDED data, this reclaims UNCOMMITTED
     * data). They are invisible to every read path, but a resumed run
-    * that stops before re-committing the same id strands them forever,
-    * and a glob-based streaming source still lists their files.
+    * that stops before re-committing the same id strands them forever.
     *
     * STRONGER contract than [[expire]]: no commit may be in flight —
     * the commit being written at `latest + 1` is manifest-less by

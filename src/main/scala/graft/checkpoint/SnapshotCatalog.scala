@@ -38,14 +38,6 @@ final class SnapshotCatalog(rootDir: String, spark: SparkSession) {
 
   def snapshotPath(id: Int): Path = snapsDir.resolve(f"$id%06d")
 
-  /** Glob over every snapshot's copy of `name` — the path a file-based
-    * streaming source reads (e.g. telemetry over the `fetched` deltas).
-    * Manifest-less turds are rare and short-lived (cleaned on the next
-    * commit of the same id); a streaming consumer that must exclude
-    * them filters on committed snapshot ids instead. */
-  def snapshotsGlob(name: String): String =
-    snapsDir.resolve("*").resolve(name).toString
-
   def latest: Option[Int] = {
     if (!Files.isDirectory(snapsDir)) return None
     val ids = listDir(snapsDir)
@@ -62,34 +54,23 @@ final class SnapshotCatalog(rootDir: String, spark: SparkSession) {
     try s.iterator().asScala.toSeq finally s.close()
   }
 
-  /** Atomically commit snapshot `id`: tables → parquet in place, then
-    * the manifest moved in last as the commit marker. Returns per-table
+  /** Atomically commit snapshot `id`, synchronously: [[commitAsync]]
+    * with every table in the bulk phase, then await. Returns per-table
     * row counts (exact, from the committed parquet footers —
     * accumulator-free, so task retries or speculative execution can
-    * never inflate them).
-    *
-    * `warmFirst` names a table whose write job is run ALONE before the
-    * rest: a write that scans the wave's shared cache chain materializes
-    * every cache block in one pass, so the remaining writes read warm
-    * blocks instead of racing on uncomputed-partition locks (measured as
-    * tasks idling in lock waits). */
+    * never inflate them). Used for the one-off snapshots (seed state,
+    * re-crawl enqueue); the wave loop commits through [[commitAsync]]. */
   def commit(
       id: Int,
       wave: Int,
       tables: Map[String, DataFrame],
-      meta: Map[String, String] = Map.empty,
-      warmFirst: Option[String] = None): Map[String, Long] = {
-    import scala.concurrent.Await
-    import scala.concurrent.duration.Duration
-    val warm = warmFirst.filter(tables.contains).toSeq
-    val (ready, done) = commitAsync(id, wave,
-      loopTables = warm.map(n => n -> tables(n)).toMap,
-      bulkTables = tables -- warm, meta)
-    Await.result(ready, Duration.Inf)
-    Await.result(done, Duration.Inf)
+      meta: Map[String, String] = Map.empty): Map[String, Long] = {
+    val (_, done) = commitAsync(id, wave,
+      loopTables = Map.empty, bulkTables = tables, meta)
+    scala.concurrent.Await.result(done, scala.concurrent.duration.Duration.Inf)
   }
 
-  /** Pipelined commit (the loop's fast path). Writes proceed in two
+  /** Pipelined commit (the wave loop's path). Writes proceed in two
     * phases, each a set of concurrent write jobs:
     *
     *   1. `loopTables` — the tables the NEXT wave reads (frontier,
@@ -119,12 +100,9 @@ final class SnapshotCatalog(rootDir: String, spark: SparkSession) {
 
     def writeOne(name: String, df: DataFrame): (String, Long, String) = {
       val dir = dest.resolve(name)
-      val tw0 = System.nanoTime()
       spark.sparkContext.setJobDescription(s"commit-$id/$name")
       df.write.mode("overwrite").parquet(dir.toString)
       spark.sparkContext.setJobDescription(null)
-      if (sys.env.contains("GRAFT_PHASE_TRACE"))
-        System.err.println(s"[commit $id] $name write=${(System.nanoTime() - tw0) / 1000000L}ms")
       val files = listDir(dir)
         .map(_.getFileName.toString)
         .filter(f => f.endsWith(".parquet"))
@@ -265,8 +243,7 @@ final class SnapshotCatalog(rootDir: String, spark: SparkSession) {
     * leftovers of killed commits. Invisible to [[latest]] and every
     * read path; they are reclaimed automatically only if the same id is
     * re-committed, so a resumed run that stops earlier strands them
-    * forever (and a glob-based streaming source still lists their
-    * files). [[graft.checkpoint.Expiry.removeOrphans]] deletes them. */
+    * forever. [[graft.checkpoint.Expiry.removeOrphans]] deletes them. */
   def uncommittedSnapshotIds: Seq[Int] = {
     if (!Files.isDirectory(snapsDir)) return Seq.empty
     listDir(snapsDir)

@@ -30,9 +30,9 @@ import org.apache.spark.sql.types._
   * whose LENGTH differs from the matrix dimension → null. (The
   * higher-order twin null-pads per plane via zip_with; these kernels
   * null the whole result instead — a short/holey embedding must never
-  * get a quietly-wrong IVF cell or LSH bucket. The equivalence pin in
-  * GraftFunctionsSpec covers well-formed inputs; the divergence on
-  * malformed ones is pinned there explicitly.) The matrix itself must
+  * get a quietly-wrong IVF cell or LSH bucket. The spec's equivalence
+  * pin ("≡ higher-order twin") covers well-formed inputs; the divergence
+  * on malformed ones is pinned beside it.) The matrix itself must
   * be non-empty and rectangular — enforced at construction.
   */
 case class DotMatrix(child: Expression, matrix: Array[Array[Double]])

@@ -30,8 +30,6 @@ final case class FrontierEntry(
     priority: Long,
     discovered_ts: Timestamp)
 
-final case class SeenEntry(url_hash: Long, partition_id: Int, wave_added: Int)
-
 /** One extracted article. `comments_json` is the page's raw embedded
   * comments payload (store-raw-once: the typed comments table is a
   * parse-on-read view, [[graft.frontier.ArticleStore.comments]]). */
@@ -47,14 +45,6 @@ final case class Article(
     comments_json: String,
     wave: Int)
 
-final case class ArticleComment(
-    url_hash: Long,
-    idx: Int,
-    content: String,
-    nick_name: String,
-    like_count: Int,
-    create_ts: Timestamp)
-
 final case class RobotsRule(host: String, path_prefix: String, allowed: Boolean)
 
 /** Politeness budget. Tokens REFILL every wave by default — a "round"
@@ -62,8 +52,7 @@ final case class RobotsRule(host: String, path_prefix: String, allowed: Boolean)
   * upstream semantics). Checkpointed CARRYOVER is opt-in
   * ([[graft.CrawlDriver.RunConfig.carryBudgets]]): unused tokens roll
   * into the next wave, capped at one extra round, persisted per
-  * snapshot as `budget_state(host, carry)`. The streaming variant keeps
-  * rolling bucket state in GroupState instead. */
+  * snapshot as `budget_state(host, carry)`. */
 final case class HostBudget(host: String, tokens_per_round: Int)
 
 /** G4 per-partition wave metrics — every field is aggregated from the

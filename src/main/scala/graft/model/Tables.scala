@@ -23,8 +23,8 @@ object Tables {
     implicitly[org.apache.spark.sql.Encoder[T]].schema
 
   /** `fetched`: CrawlOrder + lineage columns + the fetch's event time
-    * (see Wave.run fetchedTbl) — the event time feeds the streaming
-    * telemetry adapter ([[graft.streaming.StreamingMetrics]]). */
+    * (`discovered_ts`, committed with the row; see Wave.run
+    * fetchedTbl). */
   val fetched: StructType = of[CrawlOrder](Encoders.product[CrawlOrder])
     .add("host", StringType).add("partition_id", IntegerType)
     .add("discovered_ts", TimestampType)

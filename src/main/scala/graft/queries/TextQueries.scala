@@ -463,7 +463,7 @@ object TextQueries {
     // higher-order lambdas are CodegenFallback — one interpreted closure
     // call per element per plane; the custom expression is a primitive
     // loop inside whole-stage codegen with identical arithmetic
-    // (GraftFunctionsSpec pins ≡ the higher-order twin)
+    // (the DotMatrix spec pins ≡ the higher-order twin)
     val dots = graft.functions.DotMatrix(col("embedding"), weights)
     val withDots = embeddings.select(col("vec_id"), dots.as("__dots"))
     val bands = (0 until nBands).map { b =>

@@ -288,16 +288,7 @@ object EquivCheck {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val only: Option[Set[String]] =
       if (args.length > 1) Some(args(1).split(",").toSet) else None
-    val cpus = graft.HostFit.cores
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-equiv-check")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.autoBroadcastJoinThreshold", "128m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.HostFit.session("graft-equiv-check")
     var failures = 0
     val names = old.keys.toSeq.sorted.filter(n => only.forall(_.contains(n)))
     names.foreach { name =>

@@ -6,7 +6,6 @@ import java.security.MessageDigest
 
 import graft.extract.Extract
 import graft.synth.{Synth, SynthConfig}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** One-off generator for the golden extraction fixture
@@ -23,12 +22,7 @@ object GenGoldens {
       .map("%02x".format(_)).mkString
 
   def main(args: Array[String]): Unit = {
-    val cores = graft.HostFit.cores
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.HostFit.session("graft-gen-goldens")
 
     val pages = Synth.pages(spark, GoldenCfg).toDF()
       .filter(!col("url").contains("/mp/profile_ext"))

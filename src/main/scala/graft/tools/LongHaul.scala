@@ -4,7 +4,7 @@ import graft.CrawlDriver
 import graft.checkpoint.{Expiry, SnapshotCatalog}
 import graft.frontier.{ArticleStore, Wave}
 import graft.synth.{Synth, SynthConfig}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Long-horizon crawl smoke (round-5 verdict #6): drive the storage-
@@ -36,17 +36,7 @@ object LongHaul {
   def main(args: Array[String]): Unit = {
     val nPages = args.lift(0).map(_.toInt).getOrElse(3000)
     val targetWaves = args.lift(1).map(_.toInt).getOrElse(54)
-    val cpus = graft.HostFit.cores.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-longhaul")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.sql.autoBroadcastJoinThreshold", "128m")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.HostFit.session("graft-longhaul")
     import spark.implicits._
 
     val synthCfg = SynthConfig.forTargetRows(nPages)

@@ -2,7 +2,6 @@ package graft.tools
 
 import graft.extract.Extract
 import graft.synth.{Synth, SynthConfig}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end smoke drive of the public API: synthesize a corpus, run
@@ -11,12 +10,7 @@ import org.apache.spark.sql.functions._
   */
 object SmokeDrive {
   def main(args: Array[String]): Unit = {
-    val cores = graft.HostFit.cores
-    val spark = SparkSession.builder().master(s"local[$cores]")
-      .config("spark.sql.shuffle.partitions", cores.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.HostFit.session("graft-smoke")
     import spark.implicits._
 
     val cfg = SynthConfig(nAccounts = 20, articlesPerAccount = 25, longTail = 150)

@@ -1,31 +1,8 @@
 package graft
 
-import graft.synth.{Synth, SynthConfig}
 import org.apache.spark.sql.functions._
 
 class GraftFunctionsSpec extends SparkSpec {
-
-  test("custom expressions usable from SQL after registration") {
-    GraftFunctions.register(spark)
-    val cfg = SynthConfig(nAccounts = 2, articlesPerAccount = 5, longTail = 3)
-    Synth.pages(spark, cfg).toDF()
-      .filter(!col("url").contains("profile_ext"))
-      .createOrReplaceTempView("pages_v")
-    val rows = spark.sql(
-      """SELECT url_parts(url).url_hash AS h,
-                url_parts(url).biz AS biz,
-                extract_article(text).title AS title,
-                extract_article(text).read_count AS reads
-         FROM pages_v""").collect()
-    assert(rows.length === cfg.nArticles + cfg.longTail)
-    rows.foreach { r =>
-      assert(!r.isNullAt(0) && r.getString(2).nonEmpty && !r.isNullAt(3))
-    }
-    // SQL and DataFrame paths agree
-    val viaDf = graft.extract.Extract.articles(spark.table("pages_v"))
-      .select("url_hash").collect().map(_.getLong(0)).toSet
-    assert(rows.map(_.getLong(0)).toSet === viaDf)
-  }
 
   test("DotMatrix/ArgMaxDot ≡ higher-order twin, codegen'd, null-safe") {
     import spark.implicits._

@@ -13,10 +13,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * side, no shuffle of the fat page text, ever.
   *
   * Locally the crawl loop approximates this with an in-memory
-  * hash-partitioned page index ([[graft.frontier.Wave.pageIndex]]); this
-  * object is the durable-table variant, and BucketedLayoutSpec pins the
-  * zero-exchange plan with broadcast disabled — the proof that the
-  * layout works, not just a comment claiming it would.
+  * hash-partitioned page index ([[graft.frontier.Wave.pageIndex]]) and
+  * never writes this layout; this object is the durable-table variant,
+  * kept beside BucketedLayoutSpec, which pins the zero-exchange plan
+  * with broadcast disabled — the proof that the layout works, not just
+  * a comment claiming it would.
   *
   * Bucket-count sizing at scale: pages ~100 TB / target 256 MB per
   * bucket-file per partition → O(400k) buckets is absurd; instead the

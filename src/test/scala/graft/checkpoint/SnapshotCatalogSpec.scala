@@ -66,34 +66,25 @@ class SnapshotCatalogSpec extends SparkSpec {
   test("old-schema checkpoint resume: missing columns null-fill, consumers survive") {
     // a checkpoint written before the event-time column existed: its
     // `fetched` files lack discovered_ts. The fixed-schema reader
-    // (Tables.forRead) must null-fill it, the seen set must be intact,
-    // and the telemetry backfill must drop (not NPE on) the old rows.
+    // (Tables.forRead) must null-fill it and the seen set must be intact.
     import java.sql.Timestamp
     val (c, _) = freshCatalog()
     val oldFetched = Seq((0, 10L, 111L, "https://a/x", "a", 0))
       .toDF("wave", "priority", "url_hash", "url", "host", "partition_id")
-    val art = Seq(("https://a/x", 111L, "BIZ", "t", "b",
-      new Timestamp(0L), 1, 1, "[]", 0)).toDF(
-      "url", "url_hash", "biz", "title", "body", "publish_ts",
-      "read_count", "like_count", "comments_json", "wave")
-    c.commit(0, -1, Map("fetched" -> oldFetched, "articles_delta" -> art))
+    c.commit(0, -1, Map("fetched" -> oldFetched))
 
     val read = c.readTable(0, "fetched")
     assert(read.schema.fieldNames.contains("discovered_ts"))
     assert(read.filter($"discovered_ts".isNull).count() === 1)
     assert(graft.CrawlDriver.seenKeys(c, 0).as[Long].collect().toSeq === Seq(111L))
-    assert(graft.streaming.StreamingMetrics.eventsFromCatalog(c, spark).count() === 0,
-      "events without an event time must drop, not NPE")
 
-    // mixed history: a post-evolution snapshot adds timestamped rows —
-    // only those become telemetry events; the seen set spans both
+    // mixed history: a post-evolution snapshot adds timestamped rows;
+    // the seen set spans both
     val newFetched = Seq((1, 10L, 222L, "https://a/y", "a", 0,
       new Timestamp(1000L))).toDF("wave", "priority", "url_hash", "url",
       "host", "partition_id", "discovered_ts")
     c.commit(1, 0, Map("fetched" -> newFetched))
     assert(graft.CrawlDriver.seenKeys(c, 1).as[Long].collect().toSet === Set(111L, 222L))
-    val events = graft.streaming.StreamingMetrics.eventsFromCatalog(c, spark)
-    assert(events.collect().map(_.url_hash).toSeq === Seq(222L))
   }
 
   test("commit refuses to go backwards") {

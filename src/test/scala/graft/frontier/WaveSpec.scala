@@ -131,9 +131,19 @@ class WaveSpec extends SparkSpec {
 
   test("no url is ever fetched twice (seen set is exact)") {
     val c = crawl(freshDir(), 4)
-    val dupes = c.readDeltasUpTo(c.latest.get, "fetched")
-      .groupBy("url_hash").count().filter($"count" > 1)
+    val fetched = c.readDeltasUpTo(c.latest.get, "fetched")
+    val dupes = fetched.groupBy("url_hash").count().filter($"count" > 1)
     assert(dupes.count() === 0)
+    // every committed fetch carries its event time
+    assert(fetched.count() > 0)
+    assert(fetched.filter($"discovered_ts".isNull).count() === 0,
+      "every committed fetch carries its event time")
+    // a real run has extracted detail fetches AND discovery-only list fetches
+    val extracted = fetched.join(
+      c.readDeltasUpTo(c.latest.get, "articles_delta").select("url_hash"),
+      Seq("url_hash"), "left_semi").count()
+    assert(extracted > 0 && extracted < fetched.count(),
+      s"both extracted and discovery-only fetches must occur ($extracted of ${fetched.count()})")
   }
 
   test("crawl order is identical across shuffle parallelism (4 vs 9)") {
@@ -273,11 +283,16 @@ class WaveSpec extends SparkSpec {
       .groupBy("url_hash").count().as[(Long, Long)].collect().toMap
     beforeReads.keySet.foreach(h => assert(fetchCounts(h) === 2L))
     othersBefore.keySet.foreach(h => assert(fetchCounts(h) === 1L))
-    // resuming with a different shard count must be refused (the state's
-    // key space is pmod(url_hash, nShards))
-    intercept[IllegalArgumentException] {
-      CrawlDriver.runWave(spark, catalog, idx2, catalog.latest.get,
-        rc.copy(nWaves = catalog.latest.get + 1, nShards = 7))
+    // resuming or refreshing with a different shard count must be
+    // refused (the state's key space is pmod(url_hash, nShards)); the
+    // resume asks for no further wave, so only the refusal can throw
+    val wrongShards = rc.copy(nWaves = catalog.latest.get, nShards = 7)
+    Seq[() => Any](
+      () => CrawlDriver.run(spark, catalog, idx2, wrongShards),
+      () => CrawlDriver.enqueueRefresh(spark, catalog, refreshEntries, wrongShards)
+    ).foreach { call =>
+      val e = intercept[IllegalArgumentException](call())
+      assert(e.getMessage.contains("n_shards=2"), e.getMessage)
     }
   }
 
