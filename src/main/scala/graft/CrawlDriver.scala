@@ -18,9 +18,13 @@ import org.apache.spark.sql.functions._
   *
   * Per-wave driver work is deliberately minimal: the wave builds pure
   * plans; the snapshot commit materializes them as concurrent write jobs
-  * whose row counts come from observe() — there are NO standalone count
-  * jobs and no state collect/broadcast on the driver (Amdahl: driver
-  * serial time is what caps scaling efficiency at N→4N executors).
+  * whose row counts come from the committed parquet footers. There are
+  * NO standalone count jobs (run starts no job before the first wave's
+  * chain warm-up) and no state collect/broadcast on the driver (Amdahl:
+  * driver serial time is what caps scaling efficiency at N→4N
+  * executors). The robots and budgets tables need no per-run sizing:
+  * their lookups carry no join hint, so the planner picks broadcast or
+  * shuffle from their size.
   *
   * Re-crawl (upstream step-6 semantics): [[enqueueRefresh]] retracts
   * chosen URLs from the seen set (cuckoo delete + retraction delta) and
@@ -196,7 +200,7 @@ object CrawlDriver {
     val waveBudgets =
       if (cfg.carryBudgets) effectiveBudgets(budgets, budgetState(catalog, k))
       else budgets
-    val r = Wave.run(spark, k, frontier, seenExact, shards, cfg.nShards,
+    val r = Wave.run(spark, frontier, seenExact, shards, cfg.nShards,
       robots, waveBudgets, pagesIdx, cfg.waveCfg)
     // shard update is itself a lazy plan — materialized by its commit
     // write job like every other table (executor-side build + merge)
@@ -248,15 +252,6 @@ object CrawlDriver {
     requireShardConfig(catalog, cfg)
     val robots0 = catalog.readTable(0, "robots")
     val budgets0 = catalog.readTable(0, "budgets")
-    // pick the robots join regime ONCE per run: broadcast for small rule
-    // sets (rides the frontier scan stage), host-keyed shuffle join for
-    // Common-Crawl-sized ones (multi-GB aggregated rules table cannot
-    // broadcast). One count of a run-constant table — off the wave path.
-    val ruleHosts = robots0.select("host").distinct().count()
-    val effCfg =
-      if (ruleHosts > cfg.waveCfg.robotsBroadcastMaxHosts)
-        cfg.copy(waveCfg = cfg.waveCfg.copy(robotsShuffleJoin = true))
-      else cfg
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, Future[Long])]
     var pendingDone: Future[Map[String, Long]] = Future.successful(Map.empty)
     var pendingCached: Seq[DataFrame] = Nil
@@ -265,7 +260,7 @@ object CrawlDriver {
     while (k < cfg.nWaves && frontierRows != 0L) {
       val t0 = System.nanoTime()
       // plans + chain warm-up — overlaps the PREVIOUS commit's bulk phase
-      val (r, newShards) = prepareWave(spark, catalog, pagesIdx, k, effCfg,
+      val (r, newShards) = prepareWave(spark, catalog, pagesIdx, k, cfg,
         robots0, budgets0)
       val planMs = (System.nanoTime() - t0) / 1000000L
       spark.sparkContext.setJobDescription(s"wave-$k/chain-warm")
@@ -282,7 +277,7 @@ object CrawlDriver {
         if (cfg.carryBudgets)
           Some(nextBudgetState(budgets0, budgetState(catalog, k), r.fetched))
         else None
-      val (loop, bulk) = waveTables(r, newShards, effCfg, stateNext)
+      val (loop, bulk) = waveTables(r, newShards, cfg, stateNext)
       // compaction rides the bulk phase: a pure function of the already-
       // committed snapshots 0..k (pendingDone was awaited above), so a
       // kill/replay rewrites the identical base

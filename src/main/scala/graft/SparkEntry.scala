@@ -17,7 +17,7 @@ object SparkEntry {
     import spark.implicits._
     val cfg = SynthConfig(nAccounts = 5, articlesPerAccount = 12, longTail = 30)
     val pagesIdx = Wave.pageIndex(Synth.pages(spark, cfg).toDF())
-    val r = Wave.run(spark, 0,
+    val r = Wave.run(spark,
       frontier = Synth.seedFrontier(spark, cfg).toDF(),
       seenExact = Seq.empty[Long].toDF("url_hash"),
       shards = ShardedSeen.emptyShards(spark),

@@ -203,12 +203,8 @@ final class SnapshotCatalog(rootDir: String, spark: SparkSession) {
   }
 
   /** Newest snapshot ≤ `upTo` that carries `name` (e.g. the latest
-    * compaction base). Filesystem-only — no Spark job. */
-  def latestWithTable(upTo: Int, name: String): Option[Int] =
-    (upTo to 0 by -1).find(hasTable(_, name))
-
-  /** As [[latestWithTable]], but only snapshots whose manifest has
-    * landed (commit complete). The pipelined loop reads a snapshot's
+    * compaction base) and whose manifest has landed (commit complete).
+    * Filesystem-only — no Spark job. The pipelined loop reads a snapshot's
     * durable LOOP tables while its BULK phase — where compaction bases
     * are written — may still be in flight, so a base directory must not
     * be trusted until its snapshot's manifest marks the commit done. */

@@ -72,61 +72,50 @@ object Extract {
   val CommentsPayloadSchema: StructType =
     StructType(Seq(StructField("elected_comment", CommentSchema)))
 
-  /** ONE fused extraction pass over detail pages: (url identity struct,
-    * article struct, wave). Articles AND comments both derive from this —
-    * callers that need both should persist it so each page's regex pass
-    * runs exactly once per wave (extraction is the wave's dominant cost;
-    * running it once per consumer doubles the hot path).
-    *
-    * Uses the fused [[ExtractArticle]] expression (one UTF8String→String
-    * conversion per page instead of six) — byte-identical to the
-    * composed-built-in path, property-tested in ExtractSpec. */
-  def extractRaw(pages: DataFrame): DataFrame = {
-    val wave = if (pages.columns.contains("wave")) col("wave") else lit(0)
-    pages.select(
-      graft.url.UrlParts(col("url")).as("__u"),
-      ExtractArticle(col("text")).as("__a"),
-      wave.cast(IntegerType).as("wave"))
+  /** pages(url, text, …) [+ wave] → (url, url_hash, biz, text [, wave]):
+    * the URL identity the crawl's fetch join carries from the frontier,
+    * derived here with [[graft.url.UrlParts]] for callers that hold
+    * only raw page rows. */
+  private def identified(pages: DataFrame): DataFrame = {
+    val wave = pages.columns.filter(_ == "wave").map(col).toSeq
+    pages.select(Seq(graft.url.UrlParts(col("url")).as("__u"), col("text")) ++ wave: _*)
+      .select(Seq(col("__u.url").as("url"), col("__u.url_hash").as("url_hash"),
+        col("__u.biz").as("biz"), col("text")) ++ wave: _*)
   }
 
-  private def articleProjection(df: DataFrame, url: Column, hash: Column,
-      biz: Column): DataFrame =
-    df.select(url.as("url"), hash.as("url_hash"), biz.as("biz"),
-      col("__a.title").as("title"),
-      col("__a.body").as("body"),
-      timestamp_seconds(col("__a.publish_unix")).as("publish_ts"),
-      col("__a.read_count").as("read_count"),
-      col("__a.like_count").as("like_count"),
-      col("__a.comments_json").as("comments_json"),
-      col("wave"))
-      .filter(col("body") =!= "")
-
-  /** [[extractRaw]] output → articles rows (FIXTURES.md §5 schema +
-    * `comments_json`, the raw embedded payload); rows whose text lacks
-    * an article body extract as empty and are dropped.
-    *
-    * Carrying `comments_json` here is the store-raw-once pattern: the
-    * crawl persists ONE extraction pass per page into one table, and
-    * the typed comments view ([[commentsOf]]) parses the (small) JSON
-    * on read — no second regex pass, no second sink. */
-  def articlesFrom(raw: DataFrame): DataFrame =
-    articleProjection(raw, col("__u.url"), col("__u.url_hash"), col("__u.biz"))
-
   /** pages(url, text, …) [+ wave] → articles rows. */
-  def articles(pages: DataFrame): DataFrame = articlesFrom(extractRaw(pages))
+  def articles(pages: DataFrame): DataFrame = articlesIdentified(identified(pages))
 
   /** Articles from fetch-join rows that ALREADY carry URL identity
     * (url, url_hash, biz from the frontier side of the join) — the
     * crawl's hot path: re-deriving identity with UrlParts would URI-
     * parse every fetched page a second time for values the frontier
-    * already holds. */
+    * already holds.
+    *
+    * Output: the FIXTURES.md §5 article schema + `comments_json`, the
+    * raw embedded payload; rows whose text lacks an article body
+    * extract as empty and are dropped. Carrying `comments_json` is the
+    * store-raw-once pattern: the crawl persists ONE extraction pass per
+    * page into one table, and the typed comments view ([[commentsOf]])
+    * parses the (small) JSON on read — no second regex pass, no second
+    * sink. The fused [[ExtractArticle]] expression does one
+    * UTF8String→String conversion per page instead of six —
+    * byte-identical to the composed-built-in path, property-tested in
+    * ExtractSpec. */
   def articlesIdentified(pages: DataFrame): DataFrame = {
     val wave = if (pages.columns.contains("wave")) col("wave") else lit(0)
-    articleProjection(
-      pages.select(col("url"), col("url_hash"), col("biz"),
+    pages.select(col("url"), col("url_hash"), col("biz"),
         ExtractArticle(col("text")).as("__a"),
-        wave.cast(IntegerType).as("wave")),
-      col("url"), col("url_hash"), col("biz"))
+        wave.cast(IntegerType).as("wave"))
+      .select(col("url"), col("url_hash"), col("biz"),
+        col("__a.title").as("title"),
+        col("__a.body").as("body"),
+        timestamp_seconds(col("__a.publish_unix")).as("publish_ts"),
+        col("__a.read_count").as("read_count"),
+        col("__a.like_count").as("like_count"),
+        col("__a.comments_json").as("comments_json"),
+        col("wave"))
+      .filter(col("body") =!= "")
   }
 
   /** (url_hash, comments_json) → exploded typed comments (U6). */
@@ -142,13 +131,11 @@ object Extract {
         col("c.like_num").as("like_count"),
         timestamp_seconds(col("c.create_time")).as("create_ts"))
 
-  /** [[extractRaw]] output → exploded comments keyed by url_hash (U6). */
-  def commentsFrom(raw: DataFrame): DataFrame =
-    commentsOf(raw.select(col("__u.url_hash").as("url_hash"),
-      col("__a.comments_json").as("comments_json")))
-
-  /** Exploded comments keyed by url_hash (SURVEY.md §3 U6). */
-  def comments(pages: DataFrame): DataFrame = commentsFrom(extractRaw(pages))
+  /** Exploded comments keyed by url_hash (SURVEY.md §3 U6), one per
+    * page, including pages whose body extracts empty. */
+  def comments(pages: DataFrame): DataFrame =
+    commentsOf(identified(pages).select(col("url_hash"),
+      ExtractArticle(col("text")).getField("comments_json").as("comments_json")))
 
   /** List-page discovery: one row per discovered URL.
     *
@@ -160,7 +147,7 @@ object Extract {
     */
   def discovered(listPages: DataFrame): DataFrame = {
     // pass the source wave through as src_wave when present, so callers
-    // can derive the next wave from DATA instead of a lit(waveNo) and
+    // can derive the next wave from DATA instead of a literal and
     // every wave builds the same plan. That does not buy codegen-cache
     // hits: a wave compiles ~170 classes and Spark's JVM-wide cache keeps
     // spark.sql.codegen.cache.maxEntries (default 100, a static conf), so

@@ -10,7 +10,7 @@ import org.apache.spark.sql.{DataFrame, Dataset}
   * case-insensitive directives, `#` comments; directives outside any
   * user-agent group are ignored). The crawl pipeline
   * consumes the resulting (host, path_prefix, allowed) rules via the
-  * broadcast longest-prefix gate in [[Wave.robotsGate]] — parsing is a
+  * longest-prefix gate in [[Wave.robotsGate]] — parsing is a
   * distributed flatMap over fetched robots.txt bodies.
   */
 object RobotsParser {

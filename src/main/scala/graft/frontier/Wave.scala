@@ -11,10 +11,10 @@ import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** One crawl wave = one typed Dataset pipeline (SURVEY.md §4.2):
   *
-  *   frontier(k) → robots gate → seen dedupe (bloom/cuckoo + exact)
-  *     → in-batch dedupe → host-salted repartition
-  *     → token-bucket mapPartitions (fetch/defer)
-  *     → fetch-join pages → extract (articles+comments / discovery)
+  *   frontier(k) → robots gate → ShardedProbe (in-batch dedupe fused
+  *     with the bloom/cuckoo seen probe) → exact confirm
+  *     → host-salted repartition → token-bucket mapPartitions
+  *     (fetch/defer) → fetch-join pages → extract (articles / discovery)
   *     → frontier(k+1) = deferred ∪ discovered
   *
   * Determinism contract (BASELINE.json north_rule): every decision is a
@@ -31,19 +31,7 @@ object Wave {
         * not hardcoded (skew handling, SURVEY.md §8 hard-parts). */
       targetBucketRows: Long = 5000L,
       /** Politeness tokens for hosts absent from the budgets table. */
-      defaultTokens: Int = 8,
-      /** Shuffle parallelism for the salted repartition; 0 = leave to AQE. */
-      numPartitions: Int = 0,
-      /** Rule-host count above which the robots gate stops broadcasting
-        * the rules table and host-shuffle-joins instead. mp.weixin-shaped
-        * corpora have a handful of hosts (broadcast is free); a
-        * Common-Crawl 10^8-host rule set is multi-GB — unbroadcastable.
-        * The run loop measures the rules table ONCE per run (it is a
-        * snapshot-0 constant) and sets [[robotsShuffleJoin]]. */
-      robotsBroadcastMaxHosts: Long = 1000000L,
-      /** Force the scale-safe host-keyed shuffle join for robots rules
-        * (no broadcast anywhere in the gate). */
-      robotsShuffleJoin: Boolean = false)
+      defaultTokens: Int = 8)
 
   final case class WaveResult(
       decisions: Dataset[FetchDecision],
@@ -51,7 +39,6 @@ object Wave {
         * the one persisted extraction product per wave; typed comments
         * are a read-view ([[graft.frontier.ArticleStore.comments]]). */
       articles: DataFrame,
-      discovered: DataFrame,
       frontierNext: DataFrame,
       /** one row per URL fetched this wave: (wave, priority, url_hash,
         * url, host, partition_id) — serves both the seen-set delta and
@@ -75,8 +62,12 @@ object Wave {
 
   // ------------------------------------------------------- host lookups
 
-  /** `df` left-joined to the broadcast `table` on the row's host, with
-    * xxhash64(host) as the only equi-join key.
+  /** `df` left-joined to `table` on the row's host, with xxhash64(host)
+    * as the only equi-join key. There is no join hint: the planner
+    * broadcasts `table` when its size estimate is under the session's
+    * `spark.sql.autoBroadcastJoinThreshold` and shuffle-joins it
+    * otherwise, so a Common-Crawl-sized rules or budgets table takes the
+    * scale path with no knob.
     *
     * Why host lookups are long-keyed: a hash join on a string key builds
     * an `UnsafeHashedRelation`, whose `BytesToBytesMap` reserves one full
@@ -102,7 +93,7 @@ object Wave {
     val build = table.select(Seq(hash(col("host")).as("__build_hash"),
       col("host").as("__build_host")) ++ values.map(col): _*)
     df.withColumn("__probe_hash", hash(col("host")))
-      .join(broadcast(build), col("__probe_hash") === col("__build_hash") &&
+      .join(build, col("__probe_hash") === col("__build_hash") &&
         coalesce(col("host") === col("__build_host"), lit(false)), "left")
       .select(("host" +: df.columns.filter(_ != "host") ++: values).map(col): _*)
   }
@@ -112,24 +103,11 @@ object Wave {
   /** Robots gating (J4/P3): longest-prefix-match per URL, default-allow
     * when a host has no rules. The verdict is the
     * [[graft.functions.RobotsAllowed]] codegen kernel over the per-host
-    * rules array — no UDF, no window.
-    *
-    * Join physics (two regimes, same semantics):
-    *   - `shuffleJoin=false` (default; mp.weixin-shaped corpora, few
-    *     hosts): rules pre-aggregated per host (tiny) and broadcast,
-    *     keyed on the host hash ([[joinByHost]]) — zero shuffle on the
-    *     frontier, the gate rides the scan stage.
-    *   - `shuffleJoin=true` (Common-Crawl regime, ~10^8 rule hosts: the
-    *     aggregated rules table is multi-GB, unbroadcastable): host-keyed
-    *     shuffle join. The frontier pays one slim exchange; this is
-    *     strictly cheaper than semi-joining rules down to the wave's
-    *     host set first, which pays the same frontier exchange AND a
-    *     driver-serial broadcast build per wave.
-    * The crawl loop picks the regime once per run from the measured rule
-    * count vs [[WaveConfig.robotsBroadcastMaxHosts]].
+    * rules array — no UDF, no window. The rules are aggregated per host
+    * and looked up with [[joinByHost]], so the planner picks broadcast or
+    * shuffle from the aggregate's size.
     */
-  def robotsGate(frontier: DataFrame, robots: DataFrame,
-      shuffleJoin: Boolean = false): (DataFrame, DataFrame) = {
+  def robotsGate(frontier: DataFrame, robots: DataFrame): (DataFrame, DataFrame) = {
     val rulesByHost = robots
       .groupBy(col("host"))
       .agg(collect_list(struct(col("path_prefix"), col("allowed"))).as("__rules"))
@@ -138,10 +116,7 @@ object Wave {
     val rawPath = try_parse_url(col("url"), lit("PATH"))
     val withPath = frontier.withColumn("__path",
       when(rawPath.isNull || rawPath === "", lit("/")).otherwise(rawPath))
-    val joined =
-      if (shuffleJoin)
-        withPath.hint("shuffle_hash").join(rulesByHost, Seq("host"), "left")
-      else joinByHost(withPath, rulesByHost)
+    val joined = joinByHost(withPath, rulesByHost)
     // longest matching prefix wins; equal-length tie → allow wins (RFC
     // 9309 least-restrictive tie-break). The verdict is order-
     // independent: the result is (max matching len, "any allow rule at
@@ -205,12 +180,12 @@ object Wave {
         * exact per-host token split (bucket s gets t/n + (s < t mod n))
         * and the counts stay a pure function of committed state, so
         * replay determinism holds. */
-      saltSource: Option[DataFrame] = None): Dataset[FetchDecision] = {
+      saltSource: DataFrame): Dataset[FetchDecision] = {
     val spark = frontier.sparkSession
     import spark.implicits._
 
     // data-derived salt factors: only hot hosts, collected is tiny
-    val saltCounts = saltSource.getOrElse(frontier).groupBy("host").count()
+    val saltCounts = saltSource.groupBy("host").count()
       .filter(col("count") > cfg.targetBucketRows)
       .select(col("host"),
         ceil(col("count").cast("double") / cfg.targetBucketRows)
@@ -227,11 +202,7 @@ object Wave {
         col("salt"))
       .as[BudgetRow]
 
-    val parted =
-      if (cfg.numPartitions > 0) annotated.repartition(cfg.numPartitions, col("host"), col("salt"))
-      else annotated.repartition(col("host"), col("salt"))
-
-    parted
+    annotated.repartition(col("host"), col("salt"))
       .sortWithinPartitions(col("host"), col("salt"), col("priority"), col("url_hash"))
       .mapPartitions { it =>
         val pid = TaskContext.getPartitionId()
@@ -263,7 +234,6 @@ object Wave {
     * (zero standalone driver-barrier count jobs per wave). */
   def run(
       spark: SparkSession,
-      waveNo: Int,
       frontier: DataFrame,
       seenExact: DataFrame,
       shards: Dataset[SketchShard],
@@ -275,11 +245,11 @@ object Wave {
     import spark.implicits._
     val DISK = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
-    // robots gate first (broadcast + filter — no shuffle, stays inside
-    // the frontier scan stage; shuffle-join regime for huge rule sets,
-    // see robotsGate). Gate-vs-dedupe order is immaterial: duplicates
-    // share a canonical url, hence a robots verdict.
-    val (allowed, denied) = robotsGate(frontier, robots, cfg.robotsShuffleJoin)
+    // robots gate first (a broadcast lookup + filter rides the frontier
+    // scan stage; see joinByHost for when the planner shuffles instead).
+    // Gate-vs-dedupe order is immaterial: duplicates share a canonical
+    // url, hence a robots verdict.
+    val (allowed, denied) = robotsGate(frontier, robots)
     // ONE ShardedProbe operator fuses first-wins in-batch dedupe (W3)
     // with the shard-aligned sketch probe (no broadcast state) — the
     // wave's critical path pays a single frontier shuffle before budget
@@ -292,8 +262,8 @@ object Wave {
     val fresh = flagged.filter(!col("__dup")).drop("__dup")
     val dups = flagged.filter(col("__dup")).drop("__dup")
 
-    val decisions = enforceBudgets(fresh, budgets, cfg,
-      saltSource = Some(frontier)).persist(DISK)
+    val decisions = enforceBudgets(fresh, budgets, cfg, saltSource = frontier)
+      .persist(DISK)
     val toFetch = decisions.filter(col("fetched")).toDF()
 
     // J1 fetch-simulate: equi-join on url_hash against the canonical page
@@ -330,9 +300,9 @@ object Wave {
 
     // discovery → frontier entries for wave k+1 with per-account recency
     // priority: lists first (0), details ranked newest-first per biz (W1)
-    // wave numbers derive from the data (src_wave + 1), never lit(waveNo):
-    // the whole plan is wave-invariant (see Extract.discovered for why that
-    // still recompiles most generated classes each wave)
+    // wave numbers derive from the data (src_wave + 1), never a literal:
+    // the whole plan is wave-invariant (see Extract.discovered for why
+    // that still recompiles most generated classes each wave)
     val disc = Extract.discovered(listPages)
     val wPrio = Window.partitionBy(col("biz"))
       .orderBy(col("publish_unix").desc, col("url_hash").asc)
@@ -382,7 +352,7 @@ object Wave {
       .unionByName(asLedger(dups, "duplicate", "seen"))
       .unionByName(asLedger(denied, "denied", "robots"))
 
-    WaveResult(decisions, articles, discovered, frontierNext,
+    WaveResult(decisions, articles, frontierNext,
       fetchedTbl, denied, ledger,
       cached = Seq(probed, flagged, decisions.toDF(), frontierNext))
   }
@@ -443,7 +413,7 @@ object Wave {
   /** G4 per-partition metrics rollup from the wave's ledger, keyed by
     * (stage, partition_id) — a row's counts all come from one physical
     * partition of one stage. Every count is a real aggregate over the
-    * ledger plan (wave derived from the data, not lit(waveNo) — keeps
+    * ledger plan (wave derived from the data, not a literal — keeps
     * wave plans identical across waves); wave-level extracted/wall_ms
     * live in the snapshot manifest, not here. */
   def metrics(runId: String, ledger: DataFrame): DataFrame = {

@@ -43,9 +43,13 @@ final class ShardSketch(val bloom: BloomFilter, val cuckoo: CuckooFilter) {
 }
 
 object ShardSketch {
-  def empty(perShardCapacity: Long, fpp: Double = 0.01): ShardSketch =
+  /** Bloom false-positive rate: at most this share of unseen keys
+    * still take the exact confirm join. */
+  private val Fpp: Double = 0.01
+
+  def empty(perShardCapacity: Long): ShardSketch =
     new ShardSketch(
-      BloomFilter.create(math.max(perShardCapacity, 256L), fpp),
+      BloomFilter.create(math.max(perShardCapacity, 256L), Fpp),
       new CuckooFilter(math.max(perShardCapacity, 256L)))
 
   def deserialize(bytes: Array[Byte]): ShardSketch = {
@@ -139,8 +143,7 @@ object ShardedSeen {
       inserts: DataFrame,
       deletes: DataFrame,
       capacity: Long,
-      nShards: Int,
-      fpp: Double = 0.01): Dataset[SketchShard] = {
+      nShards: Int): Dataset[SketchShard] = {
     val spark = prev.sparkSession
     import spark.implicits._
     val perShard = math.max(capacity / nShards, 256L)
@@ -155,7 +158,7 @@ object ShardedSeen {
         if (opsList.isEmpty) {
           prevSketch.map(s => SketchShard(shard, s.serialize())).iterator
         } else {
-          val sk = prevSketch.getOrElse(ShardSketch.empty(perShard, fpp))
+          val sk = prevSketch.getOrElse(ShardSketch.empty(perShard))
           opsList.filter(_._2).map(_._1).sorted.foreach(sk.delete)
           opsList.filterNot(_._2).map(_._1).sorted.foreach(sk.insert)
           Iterator.single(SketchShard(shard, sk.serialize()))

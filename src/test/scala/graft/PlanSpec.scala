@@ -89,19 +89,40 @@ class PlanSpec extends SparkSpec {
   }
 
   test("robots gate shuffle regime: no broadcast anywhere, verdicts identical") {
-    // Common-Crawl regime: the aggregated rules table is multi-GB —
-    // the gate must run without a broadcast and agree with the
-    // broadcast path row-for-row
+    // Common-Crawl regime: the aggregated rules and the budgets table
+    // are multi-GB. Nothing hints a broadcast, so a threshold the tables
+    // exceed (here -1: never broadcast) makes the planner shuffle-join
+    // both host lookups, with rows identical to the broadcast plan
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
     val cfg = SynthConfig(nAccounts = 3, articlesPerAccount = 4, longTail = 30)
     val frontier = Synth.seedFrontier(spark, cfg).toDF()
     val robots = Synth.robots(spark, cfg).toDF()
-    val (aB, dB) = Wave.robotsGate(frontier, robots, shuffleJoin = false)
-    val (aS, dS) = Wave.robotsGate(frontier, robots, shuffleJoin = true)
-    val plan = planOf(aS)
-    assert(!plan.contains("BroadcastExchange") && !plan.contains("BroadcastHashJoin"),
-      s"shuffle regime must not broadcast:\n${plan.take(900)}")
-    assert(aS.exceptAll(aB).isEmpty && aB.exceptAll(aS).isEmpty, "allowed differ")
-    assert(dS.exceptAll(dB).isEmpty && dB.exceptAll(dS).isEmpty, "denied differ")
+    val budgets = Synth.budgets(spark, cfg).toDF()
+    def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def decisions() = Wave.enforceBudgets(frontier, budgets, Wave.WaveConfig(), frontier)
+    // partition_id is lineage, not a decision: it follows the plan
+    def decided(df: DataFrame) = rows(df.drop("partition_id"))
+    val (aB, dB) = Wave.robotsGate(frontier, robots)
+    val (allowedB, deniedB, decB) = (rows(aB), rows(dB), decided(decisions().toDF()))
+    assert(deniedB.nonEmpty, "the gate must deny some seed rows for this test to bite")
+    withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val (aS, dS) = Wave.robotsGate(frontier, robots)
+      val plan = planOf(aS)
+      assert(!plan.contains("BroadcastExchange") && !plan.contains("BroadcastHashJoin"),
+        s"shuffle regime must not broadcast:\n${plan.take(900)}")
+      assert(rows(aS) === allowedB, "allowed differ")
+      assert(rows(dS) === deniedB, "denied differ")
+      val decS = decisions()
+      val tokenJoins = allNodes(decS.queryExecution.executedPlan)
+        .filter(j => j.children.size == 2 &&
+          j.children(1).output.exists(_.name == "tokens_per_round"))
+      assert(tokenJoins.nonEmpty, "no join looks up tokens_per_round")
+      tokenJoins.foreach { j =>
+        assert(!j.isInstanceOf[BroadcastHashJoinExec],
+          s"budgets lookup must not broadcast:\n${j.simpleString(400)}")
+      }
+      assert(decided(decS.toDF()) === decB, "budget decisions differ")
+    }
   }
 
   /** Every physical node of `p`, descending into adaptive plans, query
@@ -237,7 +258,7 @@ class PlanSpec extends SparkSpec {
     val fresh = spark.newSession()
     import fresh.implicits._
     val cfg = SynthConfig(nAccounts = 2, articlesPerAccount = 4, longTail = 10)
-    val r = Wave.run(fresh, 0,
+    val r = Wave.run(fresh,
       frontier = Synth.seedFrontier(fresh, cfg).toDF(),
       seenExact = Seq.empty[Long].toDF("url_hash"),
       shards = ShardedSeen.emptyShards(fresh),

@@ -58,7 +58,7 @@ class ArticleStoreSpec extends SparkSpec {
       java.nio.file.Files.createTempDirectory("compact").toString, 1)
     val k = plain.latest.get
     assert(compact.latest.get === k)
-    val base = compact.latestWithTable(k, "articles_base").getOrElse(
+    val base = compact.latestCommittedWithTable(k, "articles_base").getOrElse(
       fail("no compaction base landed"))
     assert(base >= 2, "compaction must have run past the first fold")
     assert(!plain.hasTable(base, "articles_base"))

@@ -76,12 +76,15 @@ class RobotsKernelSpec extends SparkSpec {
     val robots = Seq(
       ("h1.example", "/", true), ("h1.example", "/a", false),
       ("h1.example", "/a/x", true)).toDF("host", "path_prefix", "allowed")
-    for (shuffle <- Seq(false, true)) {
-      val (allowed, denied) = Wave.robotsGate(frontier, robots, shuffle)
-      assert(allowed.select("url_hash").collect().map(_.getLong(0)).toSet ===
-        Set(1L, 2L, 3L, 4L, 5L) -- Set.empty, s"shuffle=$shuffle")
-      assert(denied.count() === 0)
-    }
+    // the default threshold broadcasts the rules; -1 forces the
+    // planner's shuffle join
+    for (threshold <- Seq("10MB", "-1"))
+      withConf("spark.sql.autoBroadcastJoinThreshold" -> threshold) {
+        val (allowed, denied) = Wave.robotsGate(frontier, robots)
+        assert(allowed.select("url_hash").collect().map(_.getLong(0)).toSet ===
+          Set(1L, 2L, 3L, 4L, 5L), s"threshold=$threshold")
+        assert(denied.count() === 0)
+      }
     // flip: /a/x denied at the longest prefix
     val robots2 = Seq(
       ("h1.example", "/", true), ("h1.example", "/a", true),

@@ -39,8 +39,11 @@ class WaveSpec extends SparkSpec {
       .sortBy(identity).toSeq
   }
 
+  /** The default two-wave crawl, shared by the specs that only read it. */
+  private lazy val twoWaves: SnapshotCatalog = crawl(freshDir(), 2)
+
   test("robots-denied urls are never fetched, and are reported") {
-    val c = crawl(freshDir(), 2)
+    val c = twoWaves
     val denied = c.readDeltasUpTo(c.latest.get, "denied")
     assert(denied.count() > 0)
     // every denied host is a k%13==0 long-tail host with /page/ path
@@ -74,6 +77,23 @@ class WaveSpec extends SparkSpec {
       .toDF("host", "path_prefix", "allowed")
     val (a2, d2) = Wave.robotsGate(frontier, rules2)
     assert(a2.count() === 0L && d2.count() === 1L)
+  }
+
+  test("shuffle-joined host lookups (broadcast threshold -1) replay the default crawl") {
+    // no config field picks the lookups' join: a rules or budgets table
+    // above the broadcast threshold takes the planner's shuffle join,
+    // and the crawl must not change with it
+    val shuffled = withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1")(
+      crawl(freshDir(), 2))
+    def seen(c: SnapshotCatalog) =
+      CrawlDriver.seenKeys(c, c.latest.get).as[Long].collect().sorted.toSeq
+    def extracted(c: SnapshotCatalog) =
+      c.readDeltasUpTo(c.latest.get, "articles_delta").select("url_hash")
+        .as[Long].collect().sorted.toSeq
+    assert(orderKey(shuffled) === orderKey(twoWaves))
+    assert(seen(shuffled) === seen(twoWaves))
+    assert(extracted(shuffled) === extracted(twoWaves))
+    assert(extracted(twoWaves).nonEmpty)
   }
 
   test("politeness: per host per wave, fetched <= tokens_per_round") {
@@ -215,7 +235,7 @@ class WaveSpec extends SparkSpec {
     assert(got === want)
     // and an end-to-end crawl gated by the ingested rules replays the
     // pre-built-rules crawl exactly
-    val a = orderKey(crawl(freshDir(), 2))
+    val a = orderKey(twoWaves)
     val b = orderKey(crawl(freshDir(), 2, robots = ingested))
     assert(a === b)
   }
