@@ -48,15 +48,7 @@ object CrawlDriver {
         * merge-on-read view at O(base + tail) instead of scanning every
         * delta ever written; rides the commit's bulk phase, off the
         * loop-critical path. */
-      compactEvery: Int = 0,
-      /** Opt-in checkpointed budget CARRYOVER ([B:6] "per-host budgets
-        * checkpoint"): unused tokens roll into the next wave, capped at
-        * one extra round (bounded burst). Each snapshot commits a
-        * `budget_state` (host, carry) table — a pure function of
-        * committed state, so kill/resume replays identically. Off by
-        * default: the reference's politeness semantics is per-round
-        * refill; only hosts in the budgets table carry state. */
-      carryBudgets: Boolean = false)
+      compactEvery: Int = 0)
 
   /** Commit snapshot 0 from seed tables. The seed frontier is derived
     * from the ACCOUNTS table (A2: one list-page entry per seeded
@@ -145,44 +137,6 @@ object CrawlDriver {
     }
   }
 
-  /** Per-host carryover state at snapshot k: (host, carry). Snapshot 0
-    * carries none (carry = 0 everywhere). */
-  private def budgetState(catalog: SnapshotCatalog, k: Int): Option[DataFrame] =
-    if (catalog.hasTable(k, "budget_state")) Some(catalog.readTable(k, "budget_state"))
-    else None
-
-  /** Budgets with carryover applied: this wave's allowance =
-    * tokens_per_round + carry (carry ≤ tokens_per_round, so a host can
-    * burst at most one extra round after idling). */
-  private def effectiveBudgets(budgets: DataFrame, state: Option[DataFrame]): DataFrame =
-    state match {
-      case None => budgets
-      case Some(st) => budgets
-        .join(st.select(col("host"), col("carry")), Seq("host"), "left")
-        .withColumn("tokens_per_round",
-          (col("tokens_per_round") + coalesce(col("carry"), lit(0))).cast("int"))
-        .select("host", "tokens_per_round")
-    }
-
-  /** Next wave's carry = min(allowance − used, tokens_per_round),
-    * floored at 0 — a pure aggregation of this wave's committed fetched
-    * delta against the run-constant budgets (deterministic on replay).
-    * Only hosts in the budgets table carry state; default-token hosts
-    * refill per wave. */
-  private def nextBudgetState(
-      budgets: DataFrame, state: Option[DataFrame], fetched: DataFrame): DataFrame = {
-    val used = fetched.groupBy("host").agg(count(lit(1)).as("__used"))
-    val carried = state.map(_.select(col("host"), col("carry"))).getOrElse(
-      budgets.select(col("host"), lit(0).as("carry")))
-    budgets.select(col("host"), col("tokens_per_round"))
-      .join(carried, Seq("host"), "left")
-      .join(used, Seq("host"), "left")
-      .select(col("host"),
-        greatest(lit(0), least(col("tokens_per_round"),
-          col("tokens_per_round") + coalesce(col("carry"), lit(0)) -
-            coalesce(col("__used"), lit(0)))).cast("int").as("carry"))
-  }
-
   /** Wave k's output plans + the updated shard table — pure plan
     * construction over snapshot k (no actions). */
   private def prepareWave(
@@ -197,11 +151,8 @@ object CrawlDriver {
     val frontier = catalog.readTable(k, "frontier")
     val seenExact = seenKeys(catalog, k)
     val shards = catalog.readTable(k, "seen_sketch").as[SketchShard]
-    val waveBudgets =
-      if (cfg.carryBudgets) effectiveBudgets(budgets, budgetState(catalog, k))
-      else budgets
     val r = Wave.run(spark, frontier, seenExact, shards, cfg.nShards,
-      robots, waveBudgets, pagesIdx, cfg.waveCfg)
+      robots, budgets, pagesIdx, cfg.waveCfg)
     // shard update is itself a lazy plan — materialized by its commit
     // write job like every other table (executor-side build + merge)
     val noDeletes = spark.range(0).select(col("id").as("url_hash"))
@@ -210,14 +161,12 @@ object CrawlDriver {
     (r, newShards.toDF())
   }
 
-  private def waveTables(r: Wave.WaveResult, newShards: DataFrame, cfg: RunConfig,
-      budgetStateNext: Option[DataFrame])
+  private def waveTables(r: Wave.WaveResult, newShards: DataFrame, cfg: RunConfig)
       : (Map[String, DataFrame], Map[String, DataFrame]) = (
     Map( // loop-critical: what wave k+1 reads
       "frontier" -> r.frontierNext,
       "fetched" -> r.fetched,
-      "seen_sketch" -> newShards) ++
-      budgetStateNext.map("budget_state" -> _),
+      "seen_sketch" -> newShards),
     Map( // bulk outputs: nothing downstream in the loop reads these
       "articles_delta" -> r.articles,
       // the gate runs BEFORE in-batch dedupe (robots verdicts are
@@ -273,11 +222,7 @@ object CrawlDriver {
       // snapshot k fully committed (manifest down) before k+1 writes start
       Await.result(pendingDone, Duration.Inf)
       pendingCached.foreach(_.unpersist())
-      val stateNext =
-        if (cfg.carryBudgets)
-          Some(nextBudgetState(budgets0, budgetState(catalog, k), r.fetched))
-        else None
-      val (loop, bulk) = waveTables(r, newShards, cfg, stateNext)
+      val (loop, bulk) = waveTables(r, newShards, cfg)
       // compaction rides the bulk phase: a pure function of the already-
       // committed snapshots 0..k (pendingDone was awaited above), so a
       // kill/replay rewrites the identical base
@@ -334,9 +279,10 @@ object CrawlDriver {
       sys.error("catalog not initialized — call init() first"))
     requireShardConfig(catalog, cfg)
     val nextWave = latest + 1
-    // contract gate: only currently-seen keys are retractable
-    val entries = refresh
-      .dropDuplicates("url_hash")
+    // contract gate: only currently-seen keys are retractable. The
+    // wave's first-wins rule picks the row per key, so a killed and
+    // re-run refresh commits the same frontier
+    val entries = Wave.dedupeInBatch(refresh)
       .join(seenKeys(catalog, latest), Seq("url_hash"), "left_semi")
       .withColumn("wave", lit(nextWave).cast("int"))
       .select("url", "url_hash", "host", "biz", "kind", "wave", "priority",

@@ -15,11 +15,12 @@ package graft.checkpoint
   * WHAT is deleted (data dirs only — every manifest survives, so
   * per-partition lineage and committed row counts remain readable):
   *
-  *   - `frontier` / `seen_sketch` / `budget_state` at snapshots strictly
-  *     between 0 and latest: resume reads ONLY the latest copy (the
-  *     crawl is a pure function of the latest committed snapshot);
-  *     snapshot 0 is kept whole (seed state + run constants robots/
-  *     budgets/accounts — replay-from-seed stays possible).
+  *   - `frontier` / `seen_sketch` at snapshots strictly between 0 and
+  *     latest: resume reads ONLY the latest copy (the crawl is a pure
+  *     function of the latest committed snapshot); snapshot 0 is kept
+  *     whole (seed state + run constants robots/budgets/accounts —
+  *     replay-from-seed stays possible; budgets refill every wave, so
+  *     no per-host budget state is committed after snapshot 0).
   *   - `fetched` / `retracted` deltas before the newest `fetched_base`:
   *     the base (committed by the [[graft.CrawlDriver]] compaction,
   *     covering deltas 0..b-1 with active retractions applied) fully
@@ -45,7 +46,7 @@ object Expiry {
   }
 
   /** Loop tables only the latest snapshot of which is ever read. */
-  private val LatestOnly = Seq("frontier", "seen_sketch", "budget_state")
+  private val LatestOnly = Seq("frontier", "seen_sketch")
 
   /** Expire superseded table data up to the latest committed snapshot.
     * Safe to call at any time between runs; idempotent. */

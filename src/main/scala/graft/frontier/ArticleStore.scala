@@ -39,17 +39,6 @@ object ArticleStore {
   def compacted(catalog: SnapshotCatalog, upToCommitted: Int): DataFrame =
     articles(catalog, upToCommitted)
 
-  /** Explicit upsert merge of a fresh batch onto a current table —
-    * full-outer + coalesce, fresh wins (J5). Column sets must match. */
-  def upsert(current: DataFrame, fresh: DataFrame): DataFrame = {
-    val cols = current.columns.filter(_ != "url_hash")
-    val cur = current.select(col("url_hash") +: cols.map(c => col(c).as(s"__old_$c")): _*)
-    val fr = fresh.select(col("url_hash") +: cols.map(c => col(c).as(s"__new_$c")): _*)
-    cur.join(fr, Seq("url_hash"), "full_outer")
-      .select(col("url_hash") +: cols.map(c =>
-        coalesce(col(s"__new_$c"), col(s"__old_$c")).as(c)): _*)
-  }
-
   /** Typed comments view over the merged articles (U6): the crawl
     * stores ONE extraction product per page (articles + raw
     * comments_json); this parses the small embedded JSON on read.

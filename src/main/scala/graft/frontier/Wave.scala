@@ -50,12 +50,13 @@ object Wave {
         * that decided it — the G4 per-partition metrics source. Counts
         * derive from THIS plan, never from driver-side literals.
         * In-batch first-wins losers (same url_hash enqueued twice in
-        * ONE wave — possible after a refresh collides with a stale
-        * discovered entry; the committed frontier itself is deduped)
-        * are dropped inside the fused probe before flagging
-        * and are NOT ledger rows: "duplicate" means seen-set duplicate.
-        * So sum(statuses) counts distinct batch keys, not raw frontier
-        * rows — the (rare) in-batch drop count is the difference. */
+        * ONE wave — possible after a refresh, since
+        * [[graft.CrawlDriver.enqueueRefresh]] commits frontier ∪
+        * refresh without deduping across the two) are dropped inside
+        * the fused probe before flagging and are NOT ledger rows:
+        * "duplicate" means seen-set duplicate. So sum(statuses) counts
+        * distinct batch keys, not raw frontier rows — the (rare)
+        * in-batch drop count is the difference. */
       ledger: DataFrame,
       /** persisted intermediates — caller unpersists after commit. */
       cached: Seq[DataFrame])
@@ -66,8 +67,9 @@ object Wave {
     * as the only equi-join key. There is no join hint: the planner
     * broadcasts `table` when its size estimate is under the session's
     * `spark.sql.autoBroadcastJoinThreshold` and shuffle-joins it
-    * otherwise, so a Common-Crawl-sized rules or budgets table takes the
-    * scale path with no knob.
+    * otherwise, so a Common-Crawl-sized rules, budgets or salt-count
+    * table takes the scale path with no knob. It is the wave's only
+    * per-host join.
     *
     * Why host lookups are long-keyed: a hash join on a string key builds
     * an `UnsafeHashedRelation`, whose `BytesToBytesMap` reserves one full
@@ -82,8 +84,9 @@ object Wave {
     * host, and a null host matches nothing, as in the host-string join.
     * It is wrapped in `coalesce(…, false)` because a plain host equality
     * would be lifted into a second, string-typed build key. PlanSpec
-    * fails a wave plan whose robots or budgets lookup builds on a string
-    * key. `hash` lets a test force several hosts into one bucket.
+    * fails a wave plan whose robots, budgets or salt-count lookup builds
+    * on a string key. `hash` lets a test force several hosts into one
+    * bucket.
     *
     * Output columns as `df.join(table, Seq("host"), "left")`: host,
     * `df`'s other columns, then `table`'s. */
@@ -172,7 +175,7 @@ object Wave {
       cfg: WaveConfig,
       /** Where to count per-host rows for salt derivation. The crawl
         * loop passes the COMMITTED frontier table: a slim parquet scan
-        * makes the salt broadcast an independent query stage (it
+        * makes the salt lookup's build an independent query stage (it
         * materializes concurrently with the probe instead of
         * serializing behind the whole decision chain — one less barrier
         * on the wave's critical path). Pre-gate counts are an upper
@@ -184,7 +187,8 @@ object Wave {
     val spark = frontier.sparkSession
     import spark.implicits._
 
-    // data-derived salt factors: only hot hosts, collected is tiny
+    // data-derived salt factors: only hot hosts, so the table is tiny
+    // (empty without skew)
     val saltCounts = saltSource.groupBy("host").count()
       .filter(col("count") > cfg.targetBucketRows)
       .select(col("host"),
@@ -192,7 +196,7 @@ object Wave {
           .cast(IntegerType).as("n_salts"))
 
     val annotated =
-      joinByHost(frontier.join(broadcast(saltCounts), Seq("host"), "left"),
+      joinByHost(joinByHost(frontier, saltCounts),
         budgets.select(col("host"), col("tokens_per_round")))
       .na.fill(Map("n_salts" -> 1, "tokens_per_round" -> cfg.defaultTokens))
       .withColumn("salt", pmod(col("url_hash"), col("n_salts")).cast(IntegerType))

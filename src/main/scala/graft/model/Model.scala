@@ -47,12 +47,10 @@ final case class Article(
 
 final case class RobotsRule(host: String, path_prefix: String, allowed: Boolean)
 
-/** Politeness budget. Tokens REFILL every wave by default — a "round"
-  * is the politeness window (per-host rate cap per crawl round, the
-  * upstream semantics). Checkpointed CARRYOVER is opt-in
-  * ([[graft.CrawlDriver.RunConfig.carryBudgets]]): unused tokens roll
-  * into the next wave, capped at one extra round, persisted per
-  * snapshot as `budget_state(host, carry)`. */
+/** Politeness budget. Tokens REFILL every wave — a "round" is the
+  * politeness window (per-host rate cap per crawl round, the upstream
+  * semantics), so the run-constant `budgets` table committed in
+  * snapshot 0 is the whole per-host budget state. */
 final case class HostBudget(host: String, tokens_per_round: Int)
 
 /** G4 per-partition wave metrics — every field is aggregated from the

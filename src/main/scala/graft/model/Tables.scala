@@ -52,9 +52,6 @@ object Tables {
     "retracted" -> retracted,
     "robots" -> of[RobotsRule](Encoders.product[RobotsRule]),
     "budgets" -> of[HostBudget](Encoders.product[HostBudget]),
-    "budget_state" -> StructType(Seq(
-      StructField("host", StringType),
-      StructField("carry", IntegerType))),
     "accounts" -> of[Account](Encoders.product[Account]),
     "metrics" -> of[CrawlMetrics](Encoders.product[CrawlMetrics]),
     "seen_sketch" -> of[SketchShardSchema](Encoders.product[SketchShardSchema]))

@@ -38,23 +38,6 @@ object Ivf {
   val DefaultCells = 16
   val DefaultProbes = 4
 
-  private def dotCol(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, w) => x.cast("double") * w),
-      lit(0.0), (acc, v) => acc + v)
-
-  /** Higher-order-function twin of [[graft.functions.DotMatrix]] — kept
-    * for the spec equivalence pin (the lambdas are CodegenFallback, so
-    * the fused expression is what production paths use). */
-  def dotsColHof(emb: Column, cs: Seq[Seq[Double]]): Column = {
-    val c = typedLit(cs)
-    transform(sequence(lit(0), lit(cs.size - 1)), j => dotCol(emb, element_at(c, j + 1)))
-  }
-
-  def cellColHof(emb: Column, cs: Seq[Seq[Double]]): Column = {
-    val dots = dotsColHof(emb, cs)
-    (array_position(dots, array_max(dots)) - 1).cast("int")
-  }
-
   /** K deterministic, L2-normalized coarse centroids: the K vectors
     * with the smallest xxhash64(vec_id) (seeded, order-stable). One
     * TakeOrdered job over (hash, id) pairs; only K embeddings reach

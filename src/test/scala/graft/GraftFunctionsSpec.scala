@@ -18,8 +18,8 @@ class GraftFunctionsSpec extends SparkSpec {
     val got = df.select(col("id"),
       graft.functions.DotMatrix(col("emb"), matrix).as("dots"),
       graft.functions.DotMatrix.argMax(col("emb"), matrix).as("am"),
-      graft.queries.Ivf.dotsColHof(col("emb"), matrix).as("dots_hof"),
-      graft.queries.Ivf.cellColHof(col("emb"), matrix).as("am_hof"))
+      DotMatrixHof.dotsColHof(col("emb"), matrix).as("dots_hof"),
+      DotMatrixHof.cellColHof(col("emb"), matrix).as("am_hof"))
     val rows = got.collect().sortBy(_.getLong(0))
     rows.filter(!_.isNullAt(1)).foreach { r =>
       assert(r.getSeq[Double](1) === r.getSeq[Double](3),

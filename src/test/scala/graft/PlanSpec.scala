@@ -89,21 +89,25 @@ class PlanSpec extends SparkSpec {
   }
 
   test("robots gate shuffle regime: no broadcast anywhere, verdicts identical") {
-    // Common-Crawl regime: the aggregated rules and the budgets table
-    // are multi-GB. Nothing hints a broadcast, so a threshold the tables
-    // exceed (here -1: never broadcast) makes the planner shuffle-join
-    // both host lookups, with rows identical to the broadcast plan
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    // Common-Crawl regime: the aggregated rules, the budgets table and
+    // the hot-host salt counts are multi-GB. Nothing hints a broadcast,
+    // so a threshold the tables exceed (here -1: never broadcast) makes
+    // the planner shuffle-join every host lookup, with rows identical to
+    // the broadcast plan
     val cfg = SynthConfig(nAccounts = 3, articlesPerAccount = 4, longTail = 30)
     val frontier = Synth.seedFrontier(spark, cfg).toDF()
     val robots = Synth.robots(spark, cfg).toDF()
     val budgets = Synth.budgets(spark, cfg).toDF()
     def rows(df: DataFrame) = df.collect().map(_.toString).sorted.toSeq
-    def decisions() = Wave.enforceBudgets(frontier, budgets, Wave.WaveConfig(), frontier)
-    // partition_id is lineage, not a decision: it follows the plan
-    def decided(df: DataFrame) = rows(df.drop("partition_id"))
+    // two rows per bucket: the hosts with more seed rows are salted, so
+    // the salt-count lookup has rows to join
+    val salted = Wave.WaveConfig(targetBucketRows = 2)
+    assert(frontier.groupBy("host").count().filter(col("count") > 2).count() > 0,
+      "some host must be salted for this test to bite")
+    def decisions() = Wave.enforceBudgets(frontier, budgets, salted, frontier).toDF()
+      .drop("partition_id") // lineage, not a decision: it follows the plan
     val (aB, dB) = Wave.robotsGate(frontier, robots)
-    val (allowedB, deniedB, decB) = (rows(aB), rows(dB), decided(decisions().toDF()))
+    val (allowedB, deniedB, decB) = (rows(aB), rows(dB), rows(decisions()))
     assert(deniedB.nonEmpty, "the gate must deny some seed rows for this test to bite")
     withConf("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
       val (aS, dS) = Wave.robotsGate(frontier, robots)
@@ -113,15 +117,11 @@ class PlanSpec extends SparkSpec {
       assert(rows(aS) === allowedB, "allowed differ")
       assert(rows(dS) === deniedB, "denied differ")
       val decS = decisions()
-      val tokenJoins = allNodes(decS.queryExecution.executedPlan)
-        .filter(j => j.children.size == 2 &&
-          j.children(1).output.exists(_.name == "tokens_per_round"))
-      assert(tokenJoins.nonEmpty, "no join looks up tokens_per_round")
-      tokenJoins.foreach { j =>
-        assert(!j.isInstanceOf[BroadcastHashJoinExec],
-          s"budgets lookup must not broadcast:\n${j.simpleString(400)}")
-      }
-      assert(decided(decS.toDF()) === decB, "budget decisions differ")
+      assert(rows(decS) === decB, "budget decisions differ")
+      val broadcasts = allNodes(decS.queryExecution.executedPlan)
+        .filter(n => n.nodeName == "BroadcastExchange" || n.nodeName == "BroadcastHashJoin")
+      assert(broadcasts.isEmpty, "budgets and salt-count lookups must not broadcast:\n" +
+        broadcasts.map(_.simpleString(400)).mkString("\n"))
     }
   }
 
@@ -144,8 +144,8 @@ class PlanSpec extends SparkSpec {
 
   test("a crawl wave's robots and budgets lookups build on the long host hash") {
     // a string-keyed hash relation reserves a full memory page however
-    // few rows it holds, so the wave's broadcast robots-rules and
-    // budgets lookups are keyed on xxhash64(host) (Wave.joinByHost):
+    // few rows it holds, so the wave's broadcast robots-rules, budgets
+    // and salt-count lookups are keyed on xxhash64(host) (Wave.joinByHost):
     // this gates every plan the crawl loop executes — chain warm-up,
     // commit writes — in the crawl sessions' configuration (AQE off,
     // 128m broadcast threshold)
@@ -190,7 +190,7 @@ class PlanSpec extends SparkSpec {
         val build = if (j.buildSide == BuildLeft) j.left else j.right
         build.output.exists(_.name == valueCol)
       }
-      Seq("__rules", "tokens_per_round").foreach { valueCol =>
+      Seq("__rules", "tokens_per_round", "n_salts").foreach { valueCol =>
         val found = lookups(valueCol)
         assert(found.nonEmpty, s"no hash join builds $valueCol:\n" +
           joins.map(_.simpleString(200)).mkString("\n"))

@@ -77,14 +77,6 @@ class ArticleStoreSpec extends SparkSpec {
     assert(stray.isEmpty, s"read must touch only base@$base + tail: ${stray.take(3)}")
   }
 
-  test("explicit upsert: fresh wins, old survives, new keys appended") {
-    val cur = Seq((1L, "old1", 10), (2L, "old2", 20)).toDF("url_hash", "title", "read_count")
-    val fresh = Seq((2L, "new2", 99), (3L, "new3", 30)).toDF("url_hash", "title", "read_count")
-    val got = ArticleStore.upsert(cur, fresh).orderBy("url_hash")
-      .collect().map(r => (r.getLong(0), r.getString(1), r.getInt(2))).toSeq
-    assert(got === Seq((1L, "old1", 10), (2L, "new2", 99), (3L, "new3", 30)))
-  }
-
   test("wave metrics carry per-partition lineage and consistent counts") {
     // run 2 waves and validate the metrics table invariants (G4)
     val cfg = graft.synth.SynthConfig(nAccounts = 3, articlesPerAccount = 10, longTail = 40)

@@ -31,6 +31,16 @@ class WaveSpec extends SparkSpec {
     catalog
   }
 
+  private def copyTree(from: String, to: String): Unit = {
+    import java.nio.file.{Files, Paths}
+    val src = Paths.get(from)
+    val walk = Files.walk(src)
+    try walk.forEach { p =>
+      val dest = Paths.get(to).resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(dest) else Files.copy(p, dest)
+    } finally walk.close()
+  }
+
   private def orderKey(c: SnapshotCatalog): Seq[(Int, Long, Long)] = {
     val last = c.latest.get
     c.readDeltasUpTo(last, "fetched")
@@ -106,46 +116,6 @@ class WaveSpec extends SparkSpec {
         .join(budgets, Seq("host"))
         .filter($"count" > $"tokens_per_round")
       assert(perHost.count() === 0, s"budget violated in snapshot $snap")
-    }
-  }
-
-  test("budget carryover: unused tokens roll forward (capped), state checkpointed") {
-    // a tight budget on every host: wave 0 (few list pages per host)
-    // underuses -> carry accrues; wave 1 (many details) can then burst
-    // up to tokens + carry, while the no-carry run stays at tokens
-    def drive(carry: Boolean): SnapshotCatalog = {
-      val dir = freshDir()
-      val catalog = new SnapshotCatalog(dir, spark)
-      val rc = CrawlDriver.RunConfig(dir, nWaves = 3, seenCapacity = 50000L,
-        nShards = 4, carryBudgets = carry)
-      val budgets = Seq((Synth.HotHost, 12)).toDF("host", "tokens_per_round")
-      CrawlDriver.init(spark, catalog, Synth.seedFrontier(spark, cfg).toDF(),
-        Synth.robots(spark, cfg).toDF(), budgets, rc)
-      CrawlDriver.run(spark, catalog, pagesIdx, rc)
-      catalog
-    }
-    val without = drive(carry = false)
-    val withC = drive(carry = true)
-    def fetchedAt(c: SnapshotCatalog, snap: Int): Long =
-      c.readTable(snap, "fetched").filter($"host" === Synth.HotHost).count()
-    // wave 0: 8 list pages on the hot host, budget 12 -> identical
-    assert(fetchedAt(without, 1) === fetchedAt(withC, 1))
-    val used0 = fetchedAt(withC, 1)
-    assert(used0 < 12, "wave 0 must underuse for this test to bite")
-    // checkpointed state after wave 0: carry = 12 - used, capped at 12
-    val carry1 = withC.readTable(1, "budget_state")
-      .filter($"host" === Synth.HotHost).select("carry").as[Int].head()
-    assert(carry1 === (12 - used0).toInt)
-    // wave 1: no-carry run is clamped to 12; carry run bursts to 12+carry
-    assert(fetchedAt(without, 2) === 12L)
-    assert(fetchedAt(withC, 2) === 12L + carry1,
-      "carry must extend the next wave's allowance exactly")
-    // burst is bounded: allowance never exceeds 2 rounds
-    (1 to withC.latest.get).foreach { s =>
-      val c = withC.readTable(s, "budget_state")
-        .filter($"host" === Synth.HotHost).select("carry").as[Int].head()
-      assert(c >= 0 && c <= 12)
-      assert(fetchedAt(withC, s) <= 24)
     }
   }
 
@@ -276,10 +246,29 @@ class WaveSpec extends SparkSpec {
       .unionByName(refreshEntries.limit(1)
         .withColumn("url_hash", lit(987654321L))
         .withColumn("url", lit("https://never.fetched/x"))) // unseen key
-    val nextWave = CrawlDriver.enqueueRefresh(spark, catalog, hostile, rc)
+    // duplicates that lose the first-wins order on priority, before the
+    // originals in one union order and after them in the other: the
+    // committed frontier must not depend on which one the caller built.
+    // The second order runs on a copy of the catalog
+    val demoted = refreshEntries.withColumn("priority", lit(5L))
+    val twinDir = freshDir()
+    copyTree(dir, twinDir)
+    val twin = new SnapshotCatalog(twinDir, spark)
+    val nextWave = CrawlDriver.enqueueRefresh(spark, catalog,
+      demoted.unionByName(hostile), rc)
+    assert(CrawlDriver.enqueueRefresh(spark, twin,
+      hostile.unionByName(demoted), rc) === nextWave)
+    val refreshed = beforeReads.keySet.toSeq.sorted
+    Seq(catalog, twin).foreach { c =>
+      val committed = c.readTable(nextWave, "frontier")
+        .filter($"url_hash".isin(refreshed: _*))
+        .select("url_hash", "priority").as[(Long, Long)].collect().sorted.toSeq
+      assert(committed === refreshed.map(_ -> 0L),
+        "the refresh must commit each key's lowest-priority-value row")
+    }
     val retractedKeys = catalog.readTable(nextWave, "retracted")
       .select("url_hash").as[Long].collect().sorted.toSeq
-    assert(retractedKeys === beforeReads.keySet.toSeq.sorted)
+    assert(retractedKeys === refreshed)
     CrawlDriver.run(spark, catalog, idx2, rc.copy(nWaves = nextWave + 1))
 
     val after = ArticleStore.articles(catalog, catalog.latest.get)
