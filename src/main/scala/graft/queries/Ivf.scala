@@ -27,9 +27,11 @@ import org.apache.spark.sql.functions._
   *     candidate scan is partition-PRUNED to nprobe cells — the read
   *     never touches the other K−nprobe cells (IvfSpec pins the pruned
   *     scan plan on a partitioned parquet write).
-  *   - query: probe cells ranked in-plan from the same literal (a
-  *     1-row broadcast, like the brute-force query vector), exact
-  *     cosine only inside the probed slice, TakeOrdered top-k.
+  *   - query ([[indexedTopK]] → [[probeIndexed]]): the inverted file
+  *     is written once; the query's probe cells are ranked at the
+  *     driver from the persisted centroids, so the scan reads only
+  *     those nprobe cell partitions; exact cosine only inside the
+  *     probed slice, TakeOrdered top-k.
   */
 object Ivf {
 
@@ -72,50 +74,6 @@ object Ivf {
         .withColumn("vec_id", lit(0L)).withColumn("cell", lit(0)).limit(0)
     embeddings.select(col("vec_id"),
       cellCol(col("embedding"), cs).as("cell"))
-  }
-
-  /** AD-HOC (index-free) IVF top-k for the query vector `vec_id =
-    * queryId`: rank all K cells by the QUERY's dot products (in-plan,
-    * from the same literal — ties broken by cell index), probe the best
-    * `nprobe`, exact cosine inside the probed slice only, top-k by
-    * (cos desc, vec_id). Recomputes cell assignment over the corpus —
-    * fine for a one-shot query, wrong as the standing read path at
-    * 10^10 vectors. The scale path (and the REGISTERED query,
-    * round-3 verdict) is [[index]] + [[probeIndexed]]: write the
-    * cell-partitioned inverted file once, then every query reads only
-    * its nprobe cell partitions. */
-  def topK(embeddings: DataFrame, queryId: Long = 0L, topK: Int = 10,
-      nprobe: Int = DefaultProbes, k: Int = DefaultCells): DataFrame = {
-    val cs = centroids(embeddings, k)
-    if (cs.isEmpty)
-      return embeddings.sparkSession.emptyDataFrame
-        .withColumn("vec_id", lit(0L)).withColumn("cell", lit(0))
-        .withColumn("cos_sim", lit(0.0)).limit(0)
-    val kk = cs.size
-    val np = math.min(nprobe, kk)
-
-    // 1-row query side: embedding + its ranked probe list. struct sort
-    // is lexicographic (neg-dot asc, cell asc) — deterministic. The
-    // fused kernel computes the dots; the rank/slice lambdas run on ONE
-    // row, so their interpreted eval is irrelevant.
-    val qdots = graft.functions.DotMatrix(col("qe"), cs)
-    val ranked = array_sort(transform(sequence(lit(0), lit(kk - 1)),
-      j => struct((-element_at(qdots, j + 1)).as("nd"), j.cast("int").as("cell"))))
-    val probes = transform(slice(ranked, 1, np), s => s.getField("cell"))
-    val q = embeddings.filter(col("vec_id") === queryId)
-      .select(col("embedding").as("qe"))
-      .select(col("qe"), probes.as("__probes"))
-
-    embeddings.filter(col("vec_id") =!= queryId)
-      .select(col("vec_id"), col("embedding"),
-        cellCol(col("embedding"), cs).as("cell"))
-      .crossJoin(broadcast(q))
-      .filter(array_contains(col("__probes"), col("cell")))
-      .select(col("vec_id"), col("cell"),
-        TextQueries.cosineCol(col("embedding"), col("qe")).as("cos_raw"))
-      .orderBy(col("cos_raw").desc, col("vec_id").asc)
-      .limit(topK)
-      .select(col("vec_id"), col("cell"), round(col("cos_raw"), 4).as("cos_sim"))
   }
 
   // ------------------------------------------------------------------
@@ -167,9 +125,9 @@ object Ivf {
   }
 
   /** The cells a query probes, ranked by its centroid dots (desc, cell
-    * index tie-break) — SAME arithmetic and tie-break as the in-plan
-    * ranking in [[topK]], but computed at the driver over the K-row
-    * centroid matrix so the probe predicate is a LITERAL `isin`:
+    * index tie-break) — the argmax-dot arithmetic of [[cellCol]],
+    * computed at the driver over the K-row centroid matrix so the probe
+    * predicate is a LITERAL `isin`:
     * that is what lets Catalyst prune the scan to nprobe partitions at
     * PLANNING time (an `array_contains(probes, cell)` from a joined
     * 1-row frame cannot prune statically). O(K·dim) driver work. */
@@ -204,7 +162,7 @@ object Ivf {
     slice
       .select(col("vec_id"), col("cell").cast("int").as("cell"),
         // r6: fused DotMatrix query-cosine kernel (the query vector is
-        // already driver-known here) — value-identical to the old
+        // already driver-known here) — value-identical to the round-5
         // cosineCol(embedding, typedLit(queryVec)) interpreted HOFs
         TextQueries.cosineToQueryCol(col("embedding"), queryVec).as("cos_raw"))
       .orderBy(col("cos_raw").desc, col("vec_id").asc)

@@ -18,20 +18,10 @@ import org.apache.spark.sql.types.LongType
   */
 object TextQueries {
 
-  /** Cosine similarity of two float-array columns via higher-order
-    * functions — codegen-friendly, no UDF (SURVEY prompt: similarity
-    * search baseline). */
-  def cosineCol(a: Column, b: Column): Column = {
-    def dd(c: Column): Column = c.cast("double")
-    val dot = aggregate(zip_with(a, b, (x, y) => dd(x) * dd(y)), lit(0.0), (acc, v) => acc + v)
-    val na = sqrt(aggregate(transform(a, x => dd(x) * dd(x)), lit(0.0), (acc, v) => acc + v))
-    val nb = sqrt(aggregate(transform(b, x => dd(x) * dd(x)), lit(0.0), (acc, v) => acc + v))
-    dot / (na * nb)
-  }
-
-  /** ‖a‖₂ with [[cosineCol]]'s exact arithmetic (f32→f64 widening,
-    * index-order left-fold) — hoisted out so a side's norm is computed
-    * once instead of once per pair (r6 guide §1.2 step 2). */
+  /** ‖a‖₂ in f64: each f32 element widened, squares summed by an
+    * index-order left-fold — the arithmetic of the round-5 cosine
+    * (`graft.CosineHof.cosineCol` under `src/test`), hoisted out so a
+    * side's norm is computed once instead of once per pair. */
   def normCol(a: Column): Column =
     sqrt(aggregate(transform(a, x => x.cast("double") * x.cast("double")),
       lit(0.0), (acc, v) => acc + v))
@@ -39,7 +29,7 @@ object TextQueries {
   /** cos(embedding, q) for a DRIVER-KNOWN query vector q: the dot rides
     * the fused [[graft.functions.DotMatrix]] codegen kernel (1-row
     * matrix) and ‖q‖ is a literal computed with the same left-fold —
-    * value-identical to `cosineCol(emb, lit(q))` (EquivCheck + spec),
+    * value-identical to the round-5 `cosineCol(emb, lit(q))` (SimilaritySpec),
     * ~10× cheaper than the interpreted per-row zip_with/aggregate
     * lambdas (r6: q_embed_topk, IVF probe). */
   def cosineToQueryCol(emb: Column, q: Seq[Float]): Column = {
@@ -161,7 +151,7 @@ object TextQueries {
     // interpreted zip_with/aggregate lambdas; oracle-checked, so the
     // kernel is the f32 oracle replica (see cosineToQueryF32Col).
     "q_embed_threshold" -> ((s, d) => {
-      brutCos(readSource(s, d, "embeddings"), graft.functions.CosineF32(_, _), cosineToQueryF32Col)
+      brutCos(readSource(s, d, "embeddings"), cosineToQueryF32Col)
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
         .filter(col("cos_sim") >= 0.25)
     }),
@@ -169,7 +159,7 @@ object TextQueries {
     // brute-force top-k (rows-only: k-boundary float ties are not
     // oracle-stable; correctness pinned in SimilaritySpec)
     "q_embed_topk" -> ((s, d) => {
-      brutCos(readSource(s, d, "embeddings"), cosineCol, cosineToQueryCol)
+      brutCos(readSource(s, d, "embeddings"), cosineToQueryCol)
         .orderBy(col("cos_raw").desc, col("vec_id").asc)
         .limit(10)
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
@@ -181,7 +171,7 @@ object TextQueries {
     // passing q_embed_threshold oracle already proves the round-4
     // scores match), unlike the raw-float k-boundary ties above
     "q_embed_topk_r4" -> ((s, d) => {
-      brutCos(readSource(s, d, "embeddings"), graft.functions.CosineF32(_, _), cosineToQueryF32Col)
+      brutCos(readSource(s, d, "embeddings"), cosineToQueryF32Col)
         .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
         .orderBy(col("cos_sim").desc, col("vec_id").asc)
         .limit(10)
@@ -220,19 +210,10 @@ object TextQueries {
       val cRows = e.filter(col("vec_id").between(1, 16))
         .select(col("vec_id").cast("int").as("cid"), col("embedding"))
         .collect().sortBy(_.getInt(0))
-      if (cRows.isEmpty) {
-        // empty-corpus fallback: the original plan shape (yields empty)
-        val c = e.filter(col("vec_id").between(1, 16))
-          .select(col("vec_id").cast("int").as("cid"), col("embedding").as("ce"))
-        val w = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("vec_id")).orderBy(col("cs").desc, col("cid").asc)
-        e.crossJoin(broadcast(c))
-          .select(col("vec_id"), col("cid"),
-            round(cosineCol(col("embedding"), col("ce")), 4).as("cs"))
-          .withColumn("rn", row_number().over(w))
-          .filter(col("rn") === 1)
-          .select(col("vec_id"), col("cid").as("cell"))
-      } else {
+      if (cRows.isEmpty) // no centroid: no vector can be assigned
+        s.emptyDataFrame
+          .withColumn("vec_id", lit(0L)).withColumn("cell", lit(0)).limit(0)
+      else {
         val mat: Seq[Seq[Float]] =
           cRows.toSeq.map(_.getSeq[Float](1).toSeq)
         val cids: Seq[Int] = cRows.toSeq.map(_.getInt(0))
@@ -261,8 +242,8 @@ object TextQueries {
       val e = readSource(s, d, "embeddings")
       val pairs = annCandidatePairs(annBuckets(e))
       // r6: each side's norm is computed once at the (small) join input
-      // instead of once per candidate pair — same arithmetic as
-      // cosineCol (dot / (na * nb)), value-identical
+      // instead of once per candidate pair — same arithmetic as the
+      // round-5 cosineCol (dot / (na * nb)), value-identical (SimilaritySpec)
       def dot(a: Column, b: Column): Column =
         aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
           lit(0.0), (acc, v) => acc + v)
@@ -285,7 +266,10 @@ object TextQueries {
     // so DuckDB replays it end-to-end. The block keeps the twin's pair
     // count quadratic only in the block size (N/10 choose 2 per run),
     // which is the same boundedness contract the production path gets
-    // from its per-bucket cap.
+    // from its per-bucket cap. ORACLE-AUDIT ONLY: the block is a sample
+    // cap, not a near-dup search — the cross join is still O(block²), so
+    // without the `vec_id % 10 = 0` filter below BOTH join inputs the
+    // query is O(N²) (PlanSpec gates the filter's placement).
     "q_embed_neardup_exact" -> ((s, d) => {
       val e = readSource(s, d, "embeddings").filter(col("vec_id") % 10 === 0)
       // oracle-checked → the pair cosine is the f32 oracle replica
@@ -369,28 +353,21 @@ object TextQueries {
     * `(vec_id, cos_raw)` over every other vector — r6 shared plan for
     * the three q_embed_* queries: the query vector comes from ONE
     * pushed-down point lookup (the Ivf.indexedTopK pattern) and the
-    * cosine is the fused `toQueryCos` codegen kernel. Falls back to the
-    * r5 crossJoin shape with `pairCos` when the corpus has no query row
-    * (yields the same empty result with the same schema). The two
-    * oracle-CHECKED queries (threshold / topk_r4) pass the oracle's f32
-    * kernels ([[graft.functions.CosineF32]], [[cosineToQueryF32Col]]);
-    * the rows-only q_embed_topk passes the f64 [[cosineCol]] /
-    * [[cosineToQueryCol]] its spec and the IVF exactness proofs compare
-    * against. */
+    * cosine is the fused `toQueryCos` codegen kernel. A corpus with no
+    * query row yields an empty frame of the same schema (TwinSpec). The
+    * two oracle-CHECKED queries (threshold / topk_r4) pass the oracle's
+    * f32 [[cosineToQueryF32Col]]; the rows-only q_embed_topk passes the
+    * f64 [[cosineToQueryCol]] its spec and the IVF exactness proofs
+    * compare against. */
   private def brutCos(e: DataFrame,
-      pairCos: (Column, Column) => Column,
       toQueryCos: (Column, Seq[Float]) => Column): DataFrame = {
     val qRow = e.filter(col("vec_id") === 0).select(col("embedding")).head(1)
-    if (qRow.isEmpty) {
-      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
-      e.filter(col("vec_id") =!= 0)
-        .crossJoin(broadcast(q))
-        .select(col("vec_id"), pairCos(col("embedding"), col("qe")).as("cos_raw"))
-    } else {
-      e.filter(col("vec_id") =!= 0)
-        .select(col("vec_id"),
-          toQueryCos(col("embedding"), qRow(0).getSeq[Float](0)).as("cos_raw"))
-    }
+    if (qRow.isEmpty)
+      return e.sparkSession.emptyDataFrame
+        .withColumn("vec_id", lit(0L)).withColumn("cos_raw", lit(0.0)).limit(0)
+    e.filter(col("vec_id") =!= 0)
+      .select(col("vec_id"),
+        toQueryCos(col("embedding"), qRow(0).getSeq[Float](0)).as("cos_raw"))
   }
 
   /** 16 minhashes over 3-token shingles, banded 8×2 (S-curve threshold
@@ -401,7 +378,7 @@ object TextQueries {
     * of exploding every shingle into a 16-min groupBy (one full shuffle
     * of the shingle set + interpreted HOF shingling, gone); the band
     * bucket hashing on top is unchanged builtins, so buckets are
-    * bit-identical (TextKernelsSpec + EquivCheck). */
+    * bit-identical (TextKernelsSpec). */
   def minhashBands(docs: DataFrame): DataFrame = {
     val sigs = docs
       .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
@@ -531,8 +508,8 @@ object TextQueries {
     * one fused codegen pass ([[graft.functions.WinnowFpsXx]]) — the
     * interpreted transform/slice/array_min lambdas (O(grams × window)
     * interpreted evals + an array copy per window) are gone; the
-    * fingerprint SET per document is identical (TextKernelsSpec +
-    * EquivCheck pin it). */
+    * fingerprint SET per document is identical (TextKernelsSpec pins
+    * it). */
   def winnow(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 5)

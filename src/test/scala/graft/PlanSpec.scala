@@ -289,6 +289,26 @@ class PlanSpec extends SparkSpec {
     assert(wide.isEmpty, wide.distinct.mkString("; "))
   }
 
+  test("q_embed_neardup_exact: the vec_id % 10 = 0 sample cap sits below both join inputs") {
+    // the oracle-audit twin is a cross join over its sample block:
+    // without the cap under each side it is quadratic in the corpus
+    import org.apache.spark.sql.execution.FilterExec
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    val df = SparkEntry.queries("q_embed_neardup_exact")(spark, sf)
+    df.collect() // finalize the adaptive plan
+    val joins = allNodes(df.queryExecution.executedPlan).collect { case j: BaseJoinExec => j }
+    assert(joins.size === 1, joins.map(_.simpleString(200)).mkString("\n"))
+    val cap = """\(vec_id % 10L?\) = 0L?\)""".r // literals print as 10L once folded to bigint
+    def capped(side: org.apache.spark.sql.execution.SparkPlan): Boolean =
+      allNodes(side).exists {
+        case f: FilterExec => cap.findFirstIn(f.condition.sql).isDefined
+        case _ => false
+      }
+    joins.head.children.foreach { side =>
+      assert(capped(side), s"join input without the sample cap:\n${side.treeString.take(800)}")
+    }
+  }
+
   test("q_semi_join: no broadcast hint, the planner sizes the key set") {
     import org.apache.spark.sql.catalyst.plans.logical.ResolvedHint
     val df = SparkEntry.queries("q_semi_join")(spark, sf)

@@ -41,12 +41,21 @@ class IvfSpec extends SparkSpec {
     assert(a1 === a2)
   }
 
+  /** Top-k for the query vector (id 0) through the inverted file:
+    * [[Ivf.index]] with K cells, then [[Ivf.probeIndexed]]. */
+  private def probeTopK(dir: String, topK: Int, nprobe: Int, k: Int): Seq[(Long, Double)] = {
+    val e = spark.read.parquet(s"$dir/embeddings.parquet")
+    val idxDir = s"$dir/ivf_index_k$k"
+    Ivf.index(e, idxDir, k)
+    val qe = e.filter(col("vec_id") === 0L).select("embedding").head().getSeq[Float](0)
+    Ivf.probeIndexed(spark, idxDir, qe, excludeId = Some(0L), topK = topK, nprobe = nprobe)
+      .select("vec_id", "cos_sim").as[(Long, Double)].collect().toSeq
+  }
+
   test("ivf with nprobe = K is exactly brute-force top-k") {
     val dir = plantedDir()
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
     val k = 5
-    val ivf = Ivf.topK(e, queryId = 0L, topK = 8, nprobe = k, k = k)
-      .select("vec_id", "cos_sim").as[(Long, Double)].collect().toSeq
+    val ivf = probeTopK(dir, topK = 8, nprobe = k, k = k)
     val brute = TextQueries.queries("q_embed_topk")(spark, dir)
       .limit(8).as[(Long, Double)].collect().toSeq
     // probing every cell searches the whole corpus → identical ranking
@@ -56,12 +65,10 @@ class IvfSpec extends SparkSpec {
 
   test("ivf recall: co-directional near-dup is found at nprobe = 1") {
     val dir = plantedDir()
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
     // id 1 is the query direction scaled → identical dot ORDER against
     // any centroid set → same argmax cell as the query, which is always
     // the first probed cell. nprobe=1 must therefore recover it at rank 1.
-    val got = Ivf.topK(e, queryId = 0L, topK = 3, nprobe = 1, k = 6)
-      .select("vec_id", "cos_sim").as[(Long, Double)].collect()
+    val got = probeTopK(dir, topK = 3, nprobe = 1, k = 6)
     assert(got.head._1 === 1L, s"planted co-dir dup must rank first: ${got.toSeq}")
     assert(got.head._2 === 1.0)
   }
@@ -89,21 +96,6 @@ class IvfSpec extends SparkSpec {
     assert(probedCount < totalCells,
       s"scan must touch only probed cells: $probedCount of $totalCells")
     assert(probedCount <= 2)
-  }
-
-  test("indexed read path at nprobe = K is exactly the ad-hoc (and brute) ranking") {
-    val dir = plantedDir()
-    val e = spark.read.parquet(s"$dir/embeddings.parquet")
-    val k = 5
-    val idxDir = s"$dir/ivf_index_full"
-    Ivf.index(e, idxDir, k)
-    val qe = e.filter(col("vec_id") === 0L).select("embedding").head().getSeq[Float](0)
-    val viaIndex = Ivf.probeIndexed(spark, idxDir, qe, excludeId = Some(0L),
-      topK = 8, nprobe = k).select("vec_id", "cos_sim").as[(Long, Double)].collect().toSeq
-    val adhoc = Ivf.topK(e, queryId = 0L, topK = 8, nprobe = k, k = k)
-      .select("vec_id", "cos_sim").as[(Long, Double)].collect().toSeq
-    assert(viaIndex === adhoc,
-      "indexed probe at nprobe=K must reproduce the ad-hoc ranking exactly")
   }
 
   test("assignment is one narrow codegen'd pass: no exchange in the plan") {

@@ -1,6 +1,7 @@
 package graft.queries
 
-import graft.SparkSpec
+import graft.{CosineHof, SparkSpec, TestData}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SimilaritySpec extends SparkSpec {
@@ -13,7 +14,7 @@ class SimilaritySpec extends SparkSpec {
       (vec(1, 0, 0), vec(1, 0, 0)),
       (vec(1, 0, 0), vec(0, 1, 0)),
       (vec(1, 2, 3), vec(4, 5, 6))).toDF("a", "b")
-    val got = df.select(round(TextQueries.cosineCol($"a", $"b"), 6)).as[Double].collect()
+    val got = df.select(round(CosineHof.cosineCol($"a", $"b"), 6)).as[Double].collect()
     assert(got(0) === 1.0)
     assert(got(1) === 0.0)
     val expect = (4.0 + 10 + 18) / (math.sqrt(14) * math.sqrt(77))
@@ -33,6 +34,68 @@ class SimilaritySpec extends SparkSpec {
     val topk = TextQueries.queries("q_embed_topk")(spark, dir).collect()
     assert(topk.map(_.getLong(0)).take(2).toSeq === Seq(1L, 2L))
     assert(topk.last.getLong(0) === 4L) // opposite ranks last
+  }
+
+  test("q_embed_topk / q_embed_neardup ≡ the round-5 cosineCol formulation on sf0.01, sf0.1 and a rescaled sf0.01") {
+    // the registered queries run the fused query-cosine kernel and the
+    // hoisted norms; the references below are the round-5 queries
+    // verbatim: cosineCol per pair, and the candidate cap as a
+    // groupBy-count re-joined to the buckets
+    def r5Pairs(buckets: DataFrame): DataFrame = {
+      val sized = buckets.join(
+        buckets.groupBy(col("band"), col("bucket"))
+          .agg(count(lit(1)).as("__n")).filter(col("__n") <= TextQueries.AnnBucketCap),
+        Seq("band", "bucket"))
+      sized.as("x").join(sized.as("y"),
+          col("x.band") === col("y.band") && col("x.bucket") === col("y.bucket") &&
+            col("x.vec_id") < col("y.vec_id"))
+        .select(col("x.vec_id").as("id_a"), col("y.vec_id").as("id_b"))
+        .distinct()
+    }
+    def r5TopK(e: DataFrame): DataFrame = {
+      val q = e.filter(col("vec_id") === 0).select(col("embedding").as("qe"))
+      e.filter(col("vec_id") =!= 0)
+        .crossJoin(broadcast(q))
+        .select(col("vec_id"), CosineHof.cosineCol(col("embedding"), col("qe")).as("cos_raw"))
+        .orderBy(col("cos_raw").desc, col("vec_id").asc)
+        .limit(10)
+        .select(col("vec_id"), round(col("cos_raw"), 4).as("cos_sim"))
+    }
+    def r5NearDup(e: DataFrame): DataFrame =
+      r5Pairs(TextQueries.annBuckets(e))
+        .join(e.select(col("vec_id").as("id_a"), col("embedding").as("emb_a")), Seq("id_a"))
+        .join(e.select(col("vec_id").as("id_b"), col("embedding").as("emb_b")), Seq("id_b"))
+        .select(col("id_a"), col("id_b"),
+          round(CosineHof.cosineCol(col("emb_a"), col("emb_b")), 4).as("cos_sim"))
+        .filter(col("cos_sim") >= 0.1)
+    // the generated embeddings are unit-norm, where a kernel that drops
+    // a norm still agrees; the rescaled copy (vector i times 2^(i % 4),
+    // exact in f32) is not
+    val rescaled = java.nio.file.Files.createTempDirectory("sim-rescaled").toString
+    spark.read.parquet(s"${TestData.root}/sf0.01/embeddings.parquet")
+      .withColumn("embedding", transform(col("embedding"),
+        x => (x * pow(lit(2.0), col("vec_id") % 4)).cast("float")))
+      .write.parquet(s"$rescaled/embeddings.parquet")
+    val inputs = Seq("sf0.01", "sf0.1").map(sf => sf -> s"${TestData.root}/$sf") :+
+      ("sf0.01 rescaled" -> rescaled)
+    for ((label, dir) <- inputs) {
+      val e = spark.read.parquet(s"$dir/embeddings.parquet")
+      for ((q, r5) <- Seq("q_embed_topk" -> r5TopK(e), "q_embed_neardup" -> r5NearDup(e))) {
+        // each side runs once; the four comparisons read the cached rows
+        val got = TextQueries.queries(q)(spark, dir).cache()
+        val ref = r5.cache()
+        val what = s"$q @ $label"
+        try {
+          assert(got.schema.map(f => (f.name, f.dataType)) ===
+            ref.schema.map(f => (f.name, f.dataType)), s"$what schema")
+          assert(ref.exceptAll(got).count() === 0, s"$what: rows only in the reference")
+          assert(got.exceptAll(ref).count() === 0, s"$what: rows only in the query")
+          val n = got.count()
+          assert(n === ref.count(), s"$what count")
+          assert(n > 0, s"$what: an empty result compares nothing")
+        } finally { got.unpersist(); ref.unpersist() }
+      }
+    }
   }
 
   test("banded ANN buckets: identical vectors share all bands, opposite flip all bits") {

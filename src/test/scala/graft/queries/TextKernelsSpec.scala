@@ -2,7 +2,7 @@ package graft.queries
 
 import graft.SparkSpec
 import graft.functions.TextKernels2
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** r6 optimization gate: every fused text kernel must be BIT-IDENTICAL
@@ -10,9 +10,14 @@ import org.apache.spark.sql.functions._
   * — on a grammar-shaped corpus AND on adversarial edge texts (unicode
   * whose lowercase maps into ASCII, multi-byte code points, tabs,
   * repeated tokens, token counts straddling the shingle/gram minima).
-  * The full-query equivalence at sf0.001/0.01/0.1 is checked by
-  * `graft.tools.EquivCheck`; this spec pins the kernels on corpora the
-  * testdata does not cover.
+  * The comparisons are query-level: the production operators
+  * (`TextQueries.minhashBands`, `simhash`, `winnow` and their md5 twins,
+  * which the q_minhash_lsh / q_simhash64 / q_fingerprint_winnow queries
+  * and the oracle-checked md5 queries run) against the round-5 queries
+  * verbatim, band step included. The md5 variants are also replayed by
+  * the DuckDB oracle on the generated testdata; this spec covers the
+  * xxhash64 variants the oracle cannot express and corpora the testdata
+  * does not cover.
   */
 class TextKernelsSpec extends SparkSpec {
 
@@ -50,7 +55,9 @@ class TextKernelsSpec extends SparkSpec {
 
   // ---- round-5 formulations (verbatim references) --------------------
 
-  private def oldMinhashBands(d: DataFrame): DataFrame = {
+  /** Round-5 16-signature minhash: shingles exploded, one min per
+    * seed in a groupBy; `hash` is xxhash64 or md5. */
+  private def oldMinhashSigs(d: DataFrame, hash: Column => Column): DataFrame = {
     val withToks = d.select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
       .filter(size(col("toks")) >= 3)
     val shingled = withToks.select(col("doc_id"),
@@ -58,40 +65,37 @@ class TextKernelsSpec extends SparkSpec {
         "transform(sequence(0, size(toks)-3), i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))")))
         .as("sh"))
     val minCols = (0 until 16).map(i =>
-      min(xxhash64(concat(col("sh"), lit(s"#$i")))).as(s"m$i"))
+      min(hash(concat(col("sh"), lit(s"#$i")))).as(s"m$i"))
     shingled.groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
   }
 
-  private def oldMinhashBandsMd5(d: DataFrame): DataFrame = {
-    val withToks = d.select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
-      .filter(size(col("toks")) >= 3)
-    val shingled = withToks.select(col("doc_id"),
-      explode(array_distinct(expr(
-        "transform(sequence(0, size(toks)-3), i -> concat(toks[i], ' ', toks[i+1], ' ', toks[i+2]))")))
-        .as("sh"))
-    val minCols = (0 until 16).map(i =>
-      min(md5(concat(col("sh"), lit(s"#$i")))).as(s"m$i"))
-    shingled.groupBy(col("doc_id")).agg(minCols.head, minCols.tail: _*)
-  }
+  /** Explodes one `bb` struct per band into (doc_id, band, bucket). */
+  private def explodeBands(sigs: DataFrame, bands: Seq[Column]): DataFrame =
+    sigs.select(col("doc_id"), explode(array(bands: _*)).as("bb"))
+      .select(col("doc_id"), col("bb.band").as("band"), col("bb.bucket").as("bucket"))
+
+  private def oldMinhashBands(d: DataFrame): DataFrame =
+    explodeBands(oldMinhashSigs(d, xxhash64(_)), (0 until 8).map { b =>
+      struct(lit(b).as("band"),
+        xxhash64(concat_ws(",",
+          (0 until 2).map(j => col(s"m${b * 2 + j}").cast("string")): _*), lit(b))
+          .as("bucket"))
+    })
+
+  private def oldMinhashBandsMd5(d: DataFrame): DataFrame =
+    explodeBands(oldMinhashSigs(d, md5), (0 until 8).map { b =>
+      struct(lit(b.toLong).as("band"),
+        md5(concat_ws(",", col(s"m${b * 2}"), col(s"m${b * 2 + 1}"), lit(b.toString)))
+          .as("bucket"))
+    })
 
   test("MinHashSigsXx ≡ explode+16-min-groupBy (incl. unicode/edge docs)") {
-    val oldSigs = oldMinhashBands(docs)
-    val newSigs = docs
-      .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id") +: (0 until 16).map(i =>
-        element_at(TextKernels2.minhashSigsXx(col("toks")), i + 1).as(s"m$i")): _*)
-    assertSameRows(oldSigs, newSigs, "minhash-xx sigs")
+    assertSameRows(oldMinhashBands(docs), TextQueries.minhashBands(docs), "minhash-xx bands")
   }
 
   test("MinHashSigsMd5 ≡ explode+16-min-md5-groupBy") {
-    val oldSigs = oldMinhashBandsMd5(docs)
-    val newSigs = docs
-      .select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
-      .filter(size(col("toks")) >= 3)
-      .select(col("doc_id") +: (0 until 16).map(i =>
-        element_at(TextKernels2.minhashSigsMd5(col("toks")), i + 1).as(s"m$i")): _*)
-    assertSameRows(oldSigs, newSigs, "minhash-md5 sigs")
+    assertSameRows(oldMinhashBandsMd5(docs), TextQueries.minhashBandsMd5(docs),
+      "minhash-md5 bands")
   }
 
   test("SimhashXx / SimhashMd5 ≡ explode+bit-vote groupBy") {
@@ -105,10 +109,7 @@ class TextKernelsSpec extends SparkSpec {
     val sim = (0 until 64).map(b =>
       when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_ + _)
     val oldXx = agg.select(col("doc_id"), sim.as("simhash"))
-    val newXx = d.select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
-      .filter(col("toks").isNotNull)
-      .select(col("doc_id"), TextKernels2.simhashXx(col("toks")).as("simhash"))
-    assertSameRows(oldXx, newXx, "simhash-xx")
+    assertSameRows(oldXx, TextQueries.simhash(d), "simhash-xx")
 
     val hx = d.select(col("doc_id"),
       explode(split(col("text"), "\\s+")).as("tok"))
@@ -123,10 +124,7 @@ class TextKernelsSpec extends SparkSpec {
     val sim60 = (0 until 60).map(b =>
       when(col(s"b$b") > 0, lit(1L << b)).otherwise(lit(0L))).reduce(_ + _)
     val oldMd5 = agg60.select(col("doc_id"), sim60.as("simhash60"))
-    val newMd5 = d.select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
-      .filter(col("toks").isNotNull)
-      .select(col("doc_id"), TextKernels2.simhashMd5(col("toks")).as("simhash60"))
-    assertSameRows(oldMd5, newMd5, "simhash-md5")
+    assertSameRows(oldMd5, TextQueries.simhashMd5(d), "simhash-md5")
   }
 
   test("WinnowFpsXx / WinnowFpsMd5 ≡ transform/slice/array_min winnowing") {
@@ -144,14 +142,8 @@ class TextKernelsSpec extends SparkSpec {
         .withColumn("fp", explode(winnowed))
         .select(col("doc_id"), col("fp"))
     }
-    def newW(md5Variant: Boolean): DataFrame =
-      d.select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
-        .filter(size(col("toks")) >= 5)
-        .select(col("doc_id"), explode(
-          if (md5Variant) TextKernels2.winnowFpsMd5(col("toks"))
-          else TextKernels2.winnowFpsXx(col("toks"))).as("fp"))
-    assertSameRows(oldW("xxhash64"), newW(md5Variant = false), "winnow-xx")
-    assertSameRows(oldW("md5"), newW(md5Variant = true), "winnow-md5")
+    assertSameRows(oldW("xxhash64"), TextQueries.winnow(d), "winnow-xx")
+    assertSameRows(oldW("md5"), TextQueries.winnowMd5(d), "winnow-md5")
   }
 
   test("NormalizeAscii ≡ regex scrub on lowered text (unicode→ASCII lowercases included)") {

@@ -5,7 +5,9 @@ import graft.SparkSpec
 /** Pins the round-5 oracle TWINS (q_embed_topk_r4, q_embed_neardup_exact,
   * q_ann_ivf_assign_r4) against independent plain-Scala replays, and the
   * topk twin against the production q_embed_topk on tie-free data — the
-  * same independent-replay discipline DedupSpec applies to the md5 twins.
+  * same independent-replay discipline DedupSpec applies to the md5 twins
+  * — and the typed empty answer of the brute-force and assign-twin
+  * queries on a corpus with no query or centroid row.
   *
   * The replay cosine is the ORACLE's single-precision arithmetic
   * (sequential f32 accumulation, separate f32 sqrts — what DuckDB's
@@ -86,6 +88,21 @@ class TwinSpec extends SparkSpec {
     assert(expect.nonEmpty && expect.size < block.size * (block.size - 1) / 2,
       "fixture must exercise both sides of the threshold")
     assert(!got.exists { case (a, b, _) => a % 10 != 0 || b % 10 != 0 })
+  }
+
+  test("empty-input contract: no query row and no centroid row yield 0 rows, same schema") {
+    // no vec_id 0 (the brute-force query vector) and none in 1..16 (the
+    // assign twin's centroids): each query answers with a typed empty frame
+    val dir = writeEmb(fan(40).filter(_._1 > 16))
+    import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
+    val scored: Seq[(String, DataType)] = Seq("vec_id" -> LongType, "cos_sim" -> DoubleType)
+    for ((q, schema) <- Seq(
+        "q_embed_threshold" -> scored, "q_embed_topk" -> scored, "q_embed_topk_r4" -> scored,
+        "q_ann_ivf_assign_r4" -> Seq("vec_id" -> LongType, "cell" -> IntegerType))) {
+      val df = TextQueries.queries(q)(spark, dir)
+      assert(df.schema.map(f => (f.name, f.dataType)) === schema, q)
+      assert(df.count() === 0L, q)
+    }
   }
 
   test("q_ann_ivf_assign_r4 twin: every vector lands on its argmax-cosine first-K centroid, lowest cid on ties") {
