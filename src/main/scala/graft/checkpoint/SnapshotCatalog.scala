@@ -98,7 +98,7 @@ final class SnapshotCatalog(rootDir: String, spark: SparkSession) {
     deleteRecursively(dest) // manifest-less turd from a killed run
     Files.createDirectories(dest)
 
-    def writeOne(name: String, df: DataFrame): (String, Long, String) = {
+    def writeOne(name: String, df: DataFrame): (String, Long, Seq[String]) = {
       val dir = dest.resolve(name)
       spark.sparkContext.setJobDescription(s"commit-$id/$name")
       df.write.mode("overwrite").parquet(dir.toString)
@@ -119,8 +119,7 @@ final class SnapshotCatalog(rootDir: String, spark: SparkSession) {
           org.apache.spark.graft.FooterCounts.rowCounts(
             spark.sparkContext, spark.sessionState.newHadoopConf(),
             files.map(f => dir.resolve(f).toUri.toString)).values.sum
-      (name, rows,
-        s""""${esc(name)}":{"rows":$rows,"files":[${files.map(f => s""""${esc(f)}"""").mkString(",")}]}""")
+      (name, rows, files)
     }
 
     // tables are independent → CONCURRENT Spark jobs (driver-side
@@ -137,15 +136,27 @@ final class SnapshotCatalog(rootDir: String, spark: SparkSession) {
       bulkWritten <- writeAll(bulkTables)
     } yield {
       val written = (loopWritten ++ bulkWritten).sortBy(_._1)
-      val parent = (0 until id).filter(i =>
+      val parent = (0 until id).findLast(i =>
         Files.exists(snapshotPath(i).resolve("manifest.json")))
-        .lastOption.map(_.toString).getOrElse("null")
-      val metaJson = meta.toSeq.sortBy(_._1)
-        .map { case (k, v) => s""""${esc(k)}":"${esc(v)}"""" }.mkString(",")
-      val manifest =
-        s"""{"snapshot_id":$id,"parent_id":$parent,"wave":$wave,""" +
-          s""""tables":{${written.map(_._3).mkString(",")}}""" +
-          (if (metaJson.nonEmpty) s""","meta":{$metaJson}}""" else "}")
+      val m = SnapshotCatalog.Json.createObjectNode()
+      m.put("snapshot_id", id)
+      parent match {
+        case Some(p) => m.put("parent_id", p)
+        case None => m.putNull("parent_id")
+      }
+      m.put("wave", wave)
+      val tablesNode = m.putObject("tables")
+      written.foreach { case (name, rows, files) =>
+        val t = tablesNode.putObject(name)
+        t.put("rows", rows)
+        val fs = t.putArray("files")
+        files.foreach(f => fs.add(f))
+      }
+      if (meta.nonEmpty) {
+        val metaNode = m.putObject("meta")
+        meta.toSeq.sortBy(_._1).foreach { case (k, v) => metaNode.put(k, v) }
+      }
+      val manifest = SnapshotCatalog.Json.writeValueAsString(m)
       val tmpManifest = dest.resolve("manifest.json.tmp")
       Files.write(tmpManifest, manifest.getBytes(UTF_8))
       Files.move(tmpManifest, dest.resolve("manifest.json"),
@@ -268,47 +279,20 @@ final class SnapshotCatalog(rootDir: String, spark: SparkSession) {
     bytes
   }
 
-  /** A meta value recorded at commit time (e.g. run_id, n_shards).
-    * Matches escaped characters and undoes [[esc]]'s write-time
-    * escaping — a value containing `"` or `\` must round-trip, not come
-    * back truncated at the first escaped quote. */
+  /** A meta value recorded at commit time (e.g. run_id, n_shards). */
   def metaValue(id: Int, key: String): Option[String] =
-    ("\"" + java.util.regex.Pattern.quote(key) + "\":\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      .findFirstMatchIn(manifest(id)).map(m => unesc(m.group(1)))
-
-  /** Inverse of [[esc]] for the escapes it emits. */
-  private def unesc(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case 'u' if i + 5 < s.length =>
-            b += Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar; i += 6
-          case e => b += e; i += 2
-        }
-      } else { b += c; i += 1 }
-    }
-    b.result()
-  }
-
-  /** Minimal JSON string escaping — table names / meta values are
-    * caller-supplied (a run_id containing `"` or `\` must not produce a
-    * malformed manifest). */
-  private def esc(s: String): String =
-    s.flatMap {
-      case '\\' => "\\\\"
-      case '"' => "\\\""
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    }
+    Option(SnapshotCatalog.Json.readTree(manifest(id)).path("meta").get(key))
+      .filter(_.isTextual).map(_.asText)
 
   private def deleteRecursively(p: Path): Unit =
     SnapshotCatalog.deleteRecursively(p)
 }
 
 object SnapshotCatalog {
+  /** Writes and reads `manifest.json`: compact, keys in insertion order
+    * (snapshot_id, parent_id, wave, tables, meta). */
+  private val Json = new com.fasterxml.jackson.databind.ObjectMapper()
+
   /** Above this many files per table, commit-time footer counts run as an
     * executor-parallel job instead of a driver-serial loop (kept small so
     * sandbox-scale commits exercise the distributed path too, while the

@@ -13,7 +13,8 @@ import org.apache.spark.sql.types._
   * extracted text per url"): `body` is the `js_content` div's inner
   * text, UNTRIMMED, and must never pass through anything that re-encodes
   * or normalizes it. Articles come from the fused [[ExtractArticle]]
-  * expression; discovery and comments are Catalyst built-ins
+  * column (a static call inside codegen); discovery and comments are
+  * Catalyst built-ins
   * (get_json_object / from_json / timestamp_seconds) — whole-stage
   * codegen end to end, no UDFs.
   */
@@ -98,8 +99,8 @@ object Extract {
     * store-raw-once pattern: the crawl persists ONE extraction pass per
     * page into one table, and the typed comments view ([[commentsOf]])
     * parses the (small) JSON on read — no second regex pass, no second
-    * sink. The fused [[ExtractArticle]] expression does one
-    * UTF8String→String conversion per page instead of six —
+    * sink. The fused [[ExtractArticle]] column scans each page once,
+    * in place, instead of six String conversions —
     * byte-identical to the composed-built-in path, property-tested in
     * ExtractSpec. */
   def articlesIdentified(pages: DataFrame): DataFrame = {

@@ -2,19 +2,17 @@ package graft.extract
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused article extraction as a single Catalyst expression (SURVEY.md §5
+/** Fused article extraction as a single Catalyst column (SURVEY.md §5
   * escape hatch (a), exercised because profiles demanded it).
   *
   * The composed-built-in path (ExtractSpec's `BuiltinExtract` twin) calls
   * regexp_extract / get_json_object six times per page; EACH call
   * converts the page's UTF8String to a fresh java.lang.String — ~150 KB
   * of garbage per 25 KB page, which makes extraction GC-bound instead of
-  * CPU-bound at high thread counts. This expression scans the page's
+  * CPU-bound at high thread counts. This column scans the page's
   * UTF-8 BYTES directly (the grammar's delimiters are ASCII literals,
   * which never occur inside UTF-8 multi-byte sequences) and returns
   * zero-copy UTF8String slices — no String conversion, no regex engine
@@ -24,29 +22,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * Comments come back as the raw embedded JSON payload; the caller
   * parses with from_json (small strings, codegen'd).
   *
-  * Codegen: emits a static call into [[ExtractArticle.evalRow]] so the
+  * Codegen: a `StaticInvoke` of [[ExtractArticle.evalRow]], so the
   * surrounding stage stays one whole-stage-codegen span (no interpreted
   * fallback on the per-page hot path).
   */
-case class ExtractArticle(child: Expression)
-    extends UnaryExpression {
-
-  override def dataType: DataType = ExtractArticle.schema
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    ExtractArticle.evalRow(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.extract.ExtractArticle$$.MODULE$$.evalRow($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): ExtractArticle =
-    copy(child = newChild)
-}
-
 object ExtractArticle {
 
-  /** Shared eval body — called from interpreted eval AND generated code.
+  /** The column's body — called from interpreted eval AND generated code.
     *
     * ZERO-COPY byte-level scan: the grammar's delimiters are all ASCII
     * literals, and ASCII bytes never occur inside UTF-8 multi-byte
@@ -295,10 +277,7 @@ object ExtractArticle {
     StructField("like_count", IntegerType),
     StructField("comments_json", StringType)))
 
-  /** Column bridge (Spark 4 classic API: Column no longer wraps
-    * Expression directly). */
-  def apply(c: Column): Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(ExtractArticle(ColumnBridge.expression(c)))
-  }
+  def apply(c: Column): Column =
+    org.apache.spark.sql.graft.ColumnBridge.staticCall(
+      this, "evalRow", schema, Seq(c -> StringType))
 }

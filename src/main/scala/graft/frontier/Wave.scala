@@ -105,8 +105,8 @@ object Wave {
 
   /** Robots gating (J4/P3): longest-prefix-match per URL, default-allow
     * when a host has no rules. The verdict is the
-    * [[graft.functions.RobotsAllowed]] codegen kernel over the per-host
-    * rules array — no UDF, no window. The rules are aggregated per host
+    * [[graft.functions.RobotsAllowed]] kernel, a static call inside
+    * codegen, over the per-host rules array — no UDF, no window. The rules are aggregated per host
     * and looked up with [[joinByHost]], so the planner picks broadcast or
     * shuffle from the aggregate's size.
     */
@@ -125,7 +125,7 @@ object Wave {
     // independent: the result is (max matching len, "any allow rule at
     // that len"), so collect_list's post-shuffle nondeterminism cannot
     // flip it. No rules / no match → allow. r6: the fold runs as the
-    // fused codegen kernel [[graft.functions.RobotsAllowed]] — the
+    // fused kernel [[graft.functions.RobotsAllowed]] — the
     // higher-order aggregate/filter lambdas were interpreted per
     // frontier row, and the gate is evaluated up to three times per
     // wave (allowed branch, denied table, metrics ledger);

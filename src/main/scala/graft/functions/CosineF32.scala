@@ -102,26 +102,15 @@ object CosineF32 {
     ColumnBridge.column(
       CosineF32(ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
-  def toMatrix(c: Column, matrix: Seq[Seq[Float]]): Column = {
-    require(matrix.nonEmpty, "CosineToMatrixF32: matrix must be non-empty")
-    require(matrix.forall(_.length == matrix.head.length),
-      s"CosineToMatrixF32: matrix must be rectangular, got row lengths ${matrix.map(_.length).distinct}")
-    ColumnBridge.column(CosineToMatrixF32(
-      ColumnBridge.expression(c), matrix.map(_.toArray).toArray))
-  }
-
-  private def wellFormed(arr: ArrayData, d: Int): Boolean = {
-    if (arr.numElements() != d) return false
-    var i = 0
-    while (i < d) { if (arr.isNullAt(i)) return false; i += 1 }
-    true
-  }
+  def toMatrix(c: Column, matrix: Seq[Seq[Float]]): Column =
+    ColumnBridge.column(CosineToMatrixF32(ColumnBridge.expression(c),
+      DotMatrix.checkedMatrix("CosineToMatrixF32", matrix)))
 
   /** Pairwise kernel body (null = malformed: length mismatch, null
     * element or a zero-norm side — LOUD, never silently wrong). */
   def cosine(a: ArrayData, b: ArrayData): java.lang.Double = {
     val d = a.numElements()
-    if (!wellFormed(b, d) || !wellFormed(a, d)) return null
+    if (!DotMatrix.wellFormed(b, d) || !DotMatrix.wellFormed(a, d)) return null
     var dot = 0.0f; var nx = 0.0f; var ny = 0.0f
     var i = 0
     while (i < d) {
@@ -140,7 +129,7 @@ object CosineF32 {
   def cosines(arr: ArrayData, m: Array[Array[Float]]): ArrayData = {
     val n = m.length
     val dim = m(0).length
-    if (!wellFormed(arr, dim)) return null
+    if (!DotMatrix.wellFormed(arr, dim)) return null
     var nx = 0.0f
     var i = 0
     while (i < dim) { val x = arr.getFloat(i); nx += x * x; i += 1 }

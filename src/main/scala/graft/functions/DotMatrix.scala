@@ -90,19 +90,21 @@ object DotMatrix {
   /** Non-empty + rectangular: an empty matrix has no argmax (the old
     * behavior returned bogus index 0), and a ragged one makes the
     * dim-mismatch null contract ambiguous. Checked once at plan
-    * construction — the matrix is a plan literal. */
-  private def checkedMatrix(matrix: Seq[Seq[Double]]): Array[Array[Double]] = {
-    require(matrix.nonEmpty, "DotMatrix: matrix must be non-empty")
+    * construction — the matrix is a plan literal. Shared by the f64
+    * [[DotMatrix]] and f32 [[CosineToMatrixF32]] kernels. */
+  private[functions] def checkedMatrix[T: scala.reflect.ClassTag](
+      name: String, matrix: Seq[Seq[T]]): Array[Array[T]] = {
+    require(matrix.nonEmpty, s"$name: matrix must be non-empty")
     require(matrix.forall(_.length == matrix.head.length),
-      s"DotMatrix: matrix must be rectangular, got row lengths ${matrix.map(_.length).distinct}")
+      s"$name: matrix must be rectangular, got row lengths ${matrix.map(_.length).distinct}")
     matrix.map(_.toArray).toArray
   }
 
   def apply(c: Column, matrix: Seq[Seq[Double]]): Column =
-    ColumnBridge.column(DotMatrix(ColumnBridge.expression(c), checkedMatrix(matrix)))
+    ColumnBridge.column(DotMatrix(ColumnBridge.expression(c), checkedMatrix("DotMatrix", matrix)))
 
   def argMax(c: Column, matrix: Seq[Seq[Double]]): Column =
-    ColumnBridge.column(ArgMaxDot(ColumnBridge.expression(c), checkedMatrix(matrix)))
+    ColumnBridge.column(ArgMaxDot(ColumnBridge.expression(c), checkedMatrix("DotMatrix", matrix)))
 
   private[functions] def checkFloatArray(child: Expression, name: String)
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
@@ -116,8 +118,9 @@ object DotMatrix {
 
   /** True iff `arr` is well-formed for a dim-`d` matrix: exactly `d`
     * elements, none null. One cheap pass (bit-test per element) before
-    * the multiply loops, so the hot loops stay null-check-free. */
-  private def wellFormed(arr: ArrayData, d: Int): Boolean = {
+    * the multiply loops, so the hot loops stay null-check-free. Shared
+    * by every `array<float>` kernel here and in [[CosineF32]]. */
+  private[functions] def wellFormed(arr: ArrayData, d: Int): Boolean = {
     if (arr.numElements() != d) return false
     var i = 0
     while (i < d) { if (arr.isNullAt(i)) return false; i += 1 }

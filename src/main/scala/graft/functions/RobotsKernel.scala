@@ -1,8 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
@@ -25,40 +23,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (the fold's struct carried it through). RobotsKernelSpec pins
   * kernel ≡ fold on randomized rule sets.
   *
-  * left = rules array<struct<path_prefix string, allowed boolean>>
-  * (the per-host collect_list), right = path string.
+  * The column is a `StaticInvoke` of [[RobotsAllowed.verdict]] over
+  * (rules array<struct<path_prefix: string, allowed: boolean>> — the
+  * per-host collect_list — and the path string).
   */
-case class RobotsAllowed(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = BooleanType
-  override def nullable: Boolean = true
-
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (ArrayType(StructType(Array(p, a)), _), StringType)
-          if p.dataType == StringType && a.dataType == BooleanType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects (array<struct<string,boolean>>, string), got $other")
-    }
-
-  override protected def nullSafeEval(rules: Any, path: Any): Any =
-    RobotsAllowed.verdict(rules.asInstanceOf[ArrayData], path.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (r, p) =>
-      s"""java.lang.Boolean ${ev.value}_v =
-         |  graft.functions.RobotsAllowed$$.MODULE$$.verdict($r, $p);
-         |if (${ev.value}_v == null) { ${ev.isNull} = true; }
-         |else { ${ev.value} = ${ev.value}_v.booleanValue(); }""".stripMargin)
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): RobotsAllowed =
-    copy(left = newLeft, right = newRight)
-}
-
 object RobotsAllowed {
 
   /** The fold, as a loop. Array order is irrelevant by construction
@@ -91,7 +59,10 @@ object RobotsAllowed {
     bestAllowed
   }
 
+  private val Rules = ArrayType(StructType(Seq(
+    StructField("path_prefix", StringType), StructField("allowed", BooleanType))))
+
   def apply(rules: Column, path: Column): Column =
-    ColumnBridge.column(RobotsAllowed(
-      ColumnBridge.expression(rules), ColumnBridge.expression(path)))
+    ColumnBridge.staticCall(this, "verdict", BooleanType,
+      Seq(rules -> Rules, path -> StringType))
 }

@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression, XxHash64Function}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.XxHash64Function
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
+import org.apache.spark.sql.functions.lit
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -26,19 +26,23 @@ import org.apache.spark.unsafe.types.UTF8String
   * produced — bit-for-bit (TextKernelsSpec pins kernel ≡ the original
   * formulation on generated + edge-case corpora):
   *
-  *   - [[MinHashSigsXx]] / [[MinHashSigsMd5]]: 16 min-hash signatures
+  *   - [[minhashXx]] / [[minhashMd5]]: 16 min-hash signatures
   *     over 3-token shingles (min over shingles of
   *     xxhash64(shingle+"#i") / lexicographic-min md5 hex).
-  *   - [[SimhashXx]] / [[SimhashMd5]]: 64-bit (xxhash64 token votes) /
+  *   - [[simhashXx]] / [[simhashMd5]]: 64-bit (xxhash64 token votes) /
   *     60-bit (md5 hex-digit votes) SimHash.
-  *   - [[WinnowFpsXx]] / [[WinnowFpsMd5]]: Schleimer winnowing — 5-gram
+  *   - [[winnowXx]] / [[winnowMd5]]: Schleimer winnowing — 5-gram
   *     hashes, min per 4-window, first-occurrence-distinct.
-  *   - [[NormalizeAscii]]: the dedup-norm scrub (non-[a-z0-9] → space,
+  *   - [[normalizeAscii]]: the dedup-norm scrub (non-[a-z0-9] → space,
   *     collapse runs, trim) as one byte scan over an ALREADY-LOWERCASED
   *     string — replaces two regex passes. Byte-level equivalence: a
   *     multi-byte code point's bytes each map to a pending space, which
   *     the collapse merges exactly like the regex's one-space-per-code-
   *     point followed by `' +' → ' '`.
+  *
+  * [[TextKernels2]] builds the columns: each is Spark's `StaticInvoke`
+  * of one of these bodies, so interpreted eval and generated code run
+  * the same method and the call stays inside whole-stage codegen.
   *
   * Null contract (matches what the original pipelines did): null input
   * → null; a null ELEMENT inside a token array → null result (split()
@@ -183,9 +187,9 @@ object TextKernels {
     * same row the original emitted for a doc whose split produced only
     * tokens hashing to all-negative votes... (empty arrays cannot occur
     * from split(); pinned in spec). */
-  def simhashXx(arr: ArrayData): Long = {
+  def simhashXx(arr: ArrayData): java.lang.Long = {
     val t = toks(arr)
-    if (t == null) return -1L // sentinel, mapped to null by the wrapper
+    if (t == null) return null
     val votes = new Array[Int](64)
     var i = 0
     while (i < t.length) {
@@ -206,9 +210,9 @@ object TextKernels {
   /** 60-bit md5 SimHash: bit (15-p)*4+k votes by bit k of hex digit p
     * (1-based) of md5(token)'s first 15 hex chars — exactly the
     * conv/substring formulation in [[graft.queries.TextQueries.simhashMd5]]. */
-  def simhashMd5(arr: ArrayData): Long = {
+  def simhashMd5(arr: ArrayData): java.lang.Long = {
     val t = toks(arr)
-    if (t == null) return -1L
+    if (t == null) return null
     val votes = new Array[Int](60)
     var i = 0
     while (i < t.length) {
@@ -317,143 +321,30 @@ object TextKernels {
   }
 }
 
-/** Base for the array&lt;string&gt; → T kernels: interpreted eval and
-  * generated code both call the same static method (the DotMatrix
-  * pattern — the call stays inside whole-stage codegen). */
-sealed abstract class TokenKernel extends UnaryExpression {
-  override def nullable: Boolean = true
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case ArrayType(StringType, _) =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects array<string>, got ${other.catalogString}")
-    }
-}
-
-case class MinHashSigsXx(child: Expression, nSigs: Int = 16) extends TokenKernel {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.minhashXx(input.asInstanceOf[ArrayData], nSigs)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.TextKernels$$.MODULE$$.minhashXx($c, $nSigs);
-         |${ev.isNull} = (${ev.value} == null);""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigsXx =
-    copy(child = newChild)
-}
-
-case class MinHashSigsMd5(child: Expression, nSigs: Int = 16) extends TokenKernel {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.minhashMd5(input.asInstanceOf[ArrayData], nSigs)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.TextKernels$$.MODULE$$.minhashMd5($c, $nSigs);
-         |${ev.isNull} = (${ev.value} == null);""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): MinHashSigsMd5 =
-    copy(child = newChild)
-}
-
-case class SimhashXx(child: Expression) extends TokenKernel {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[ArrayData]
-    var i = 0
-    while (i < t.numElements()) { if (t.isNullAt(i)) return null; i += 1 }
-    TextKernels.simhashXx(t)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""boolean ${ev.value}_hasNull = false;
-         |for (int i = 0; i < $c.numElements(); i++) {
-         |  if ($c.isNullAt(i)) { ${ev.value}_hasNull = true; break; }
-         |}
-         |if (${ev.value}_hasNull) { ${ev.isNull} = true; }
-         |else { ${ev.value} = graft.functions.TextKernels$$.MODULE$$.simhashXx($c); }""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): SimhashXx =
-    copy(child = newChild)
-}
-
-case class SimhashMd5(child: Expression) extends TokenKernel {
-  override def dataType: DataType = LongType
-  override protected def nullSafeEval(input: Any): Any = {
-    val t = input.asInstanceOf[ArrayData]
-    var i = 0
-    while (i < t.numElements()) { if (t.isNullAt(i)) return null; i += 1 }
-    TextKernels.simhashMd5(t)
-  }
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""boolean ${ev.value}_hasNull = false;
-         |for (int i = 0; i < $c.numElements(); i++) {
-         |  if ($c.isNullAt(i)) { ${ev.value}_hasNull = true; break; }
-         |}
-         |if (${ev.value}_hasNull) { ${ev.isNull} = true; }
-         |else { ${ev.value} = graft.functions.TextKernels$$.MODULE$$.simhashMd5($c); }""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): SimhashMd5 =
-    copy(child = newChild)
-}
-
-case class WinnowFpsXx(child: Expression) extends TokenKernel {
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.winnowXx(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.TextKernels$$.MODULE$$.winnowXx($c);
-         |${ev.isNull} = (${ev.value} == null);""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): WinnowFpsXx =
-    copy(child = newChild)
-}
-
-case class WinnowFpsMd5(child: Expression) extends TokenKernel {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.winnowMd5(input.asInstanceOf[ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, c =>
-      s"""${ev.value} = graft.functions.TextKernels$$.MODULE$$.winnowMd5($c);
-         |${ev.isNull} = (${ev.value} == null);""".stripMargin)
-  override protected def withNewChildInternal(newChild: Expression): WinnowFpsMd5 =
-    copy(child = newChild)
-}
-
-case class NormalizeAscii(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = StringType
-  override def nullable: Boolean = child.nullable
-  override def checkInputDataTypes(): org.apache.spark.sql.catalyst.analysis.TypeCheckResult =
-    child.dataType match {
-      case StringType =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
-      case other =>
-        org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-          s"$prettyName expects string, got ${other.catalogString}")
-    }
-  override protected def nullSafeEval(input: Any): Any =
-    TextKernels.normalizeAscii(input.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c =>
-      s"graft.functions.TextKernels$$.MODULE$$.normalizeAscii($c)")
-  override protected def withNewChildInternal(newChild: Expression): NormalizeAscii =
-    copy(child = newChild)
-}
-
-/** Column-API constructors. */
+/** Column-API constructors: each builds a `StaticInvoke` of the matching
+  * [[TextKernels]] body over an `array<string>` token column (a
+  * `string` for [[normalizeAscii]]). */
 object TextKernels2 {
+  private val Tokens = ArrayType(StringType)
+
+  private def tokenKernel(method: String, dataType: DataType, c: Column,
+      extra: (Column, DataType)*): Column =
+    ColumnBridge.staticCall(TextKernels, method, dataType, (c, Tokens) +: extra)
+
   def minhashSigsXx(c: Column, nSigs: Int = 16): Column =
-    ColumnBridge.column(MinHashSigsXx(ColumnBridge.expression(c), nSigs))
+    tokenKernel("minhashXx", ArrayType(LongType, containsNull = false), c,
+      lit(nSigs) -> IntegerType)
   def minhashSigsMd5(c: Column, nSigs: Int = 16): Column =
-    ColumnBridge.column(MinHashSigsMd5(ColumnBridge.expression(c), nSigs))
-  def simhashXx(c: Column): Column =
-    ColumnBridge.column(SimhashXx(ColumnBridge.expression(c)))
-  def simhashMd5(c: Column): Column =
-    ColumnBridge.column(SimhashMd5(ColumnBridge.expression(c)))
+    tokenKernel("minhashMd5", ArrayType(StringType, containsNull = false), c,
+      lit(nSigs) -> IntegerType)
+  def simhashXx(c: Column): Column = tokenKernel("simhashXx", LongType, c)
+  def simhashMd5(c: Column): Column = tokenKernel("simhashMd5", LongType, c)
   def winnowFpsXx(c: Column): Column =
-    ColumnBridge.column(WinnowFpsXx(ColumnBridge.expression(c)))
+    tokenKernel("winnowXx", ArrayType(LongType, containsNull = false), c)
   def winnowFpsMd5(c: Column): Column =
-    ColumnBridge.column(WinnowFpsMd5(ColumnBridge.expression(c)))
+    tokenKernel("winnowMd5", ArrayType(StringType, containsNull = false), c)
+  /** Never null on a non-null input, so nullable only when `c` is. */
   def normalizeAscii(c: Column): Column =
-    ColumnBridge.column(NormalizeAscii(ColumnBridge.expression(c)))
+    ColumnBridge.staticCall(TextKernels, "normalizeAscii", StringType,
+      Seq(c -> StringType), returnNullable = false)
 }

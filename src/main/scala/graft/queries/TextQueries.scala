@@ -73,7 +73,7 @@ object TextQueries {
     }),
 
     // r6: the two regex passes ([^a-z0-9 ]→' ', ' +'→' ') + trim are one
-    // fused byte scan over the lowered string (NormalizeAscii — byte-
+    // fused byte scan over the lowered string (normalizeAscii — byte-
     // identical, TextKernelsSpec); the grouping/shuffle shape is unchanged
     "q_dedup_norm" -> ((s, d) => {
       val norm = graft.functions.TextKernels2.normalizeAscii(lower(col("text")))
@@ -374,7 +374,7 @@ object TextQueries {
     * (1/8)^(1/2) ≈ 0.35 Jaccard — catches training-data near-dups).
     *
     * r6: the 16 signatures come from the fused [[graft.functions
-    * .MinHashSigsXx]] kernel — one codegen pass per document — instead
+    * .TextKernels.minhashXx]] kernel — one codegen pass per document — instead
     * of exploding every shingle into a 16-min groupBy (one full shuffle
     * of the shingle set + interpreted HOF shingling, gone); the band
     * bucket hashing on top is unchanged builtins, so buckets are
@@ -396,7 +396,7 @@ object TextQueries {
   }
 
   /** Classic 64-bit SimHash: sign of per-bit vote sums over token hashes.
-    * r6: per-document fused vote kernel ([[graft.functions.SimhashXx]])
+    * r6: per-document fused vote kernel ([[graft.functions.TextKernels.simhashXx]])
     * — the explode→64-sum groupBy shuffle is gone; values identical. */
   def simhash(docs: DataFrame): DataFrame =
     docs.select(col("doc_id"), split(col("text"), "\\s+").as("toks"))
@@ -505,7 +505,7 @@ object TextQueries {
     * Schleimer et al. "Winnowing", SIGMOD'03 — public paper).
     *
     * r6: gram hashing + window minima + first-occurrence distinct are
-    * one fused codegen pass ([[graft.functions.WinnowFpsXx]]) — the
+    * one fused codegen pass ([[graft.functions.TextKernels.winnowXx]]) — the
     * interpreted transform/slice/array_min lambdas (O(grams × window)
     * interpreted evals + an array copy per window) are gone; the
     * fingerprint SET per document is identical (TextKernelsSpec pins

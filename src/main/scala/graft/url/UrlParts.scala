@@ -2,43 +2,25 @@ package graft.url
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-/** Fused URL identity expression: one parse → (canon, url_hash, host, biz).
+/** Fused URL identity column: one parse → (canon, url_hash, host, biz).
   *
   * The composed-built-in [[UrlCanon.canonicalCol]] invokes Spark's
   * ParseUrlEvaluator 4–8× per URL (PROTOCOL/HOST/PATH/QUERY, and the
   * whole CASE tree is duplicated wherever both canon and hash are
   * selected — visible as multi-KB expression trees in explain output).
-  * This expression parses once via the pure-Scala twin and returns all
+  * This column parses once via the pure-Scala twin and returns all
   * four identity fields. Output is equal to the built-in path by the
   * UrlCanonSpec equivalence property (both are property-tested against
   * [[UrlCanon.canonicalize]]).
   *
-  * Codegen: emits a static call into [[UrlParts.evalRow]] — the
-  * expression participates in whole-stage codegen (no interpreted-eval
-  * stage break on the hottest path: every page + every frontier row).
+  * Codegen: a `StaticInvoke` of [[UrlParts.evalRow]] — the call
+  * participates in whole-stage codegen (no interpreted-eval stage break
+  * on the hottest path: every page + every frontier row).
   */
-case class UrlParts(child: Expression)
-    extends UnaryExpression {
-
-  override def dataType: DataType = UrlParts.schema
-  override def nullable: Boolean = true
-
-  override protected def nullSafeEval(input: Any): Any =
-    UrlParts.evalRow(input.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.url.UrlParts$$.MODULE$$.evalRow($c)")
-
-  override protected def withNewChildInternal(newChild: Expression): UrlParts =
-    copy(child = newChild)
-}
-
 object UrlParts {
   val schema: StructType = StructType(Seq(
     StructField("url", StringType),
@@ -47,9 +29,9 @@ object UrlParts {
     StructField("biz", StringType)))
 
   def apply(c: Column): Column =
-    ColumnBridge.column(UrlParts(ColumnBridge.expression(c)))
+    ColumnBridge.staticCall(this, "evalRow", schema, Seq(c -> StringType))
 
-  /** Shared eval body — called from interpreted eval AND generated code
+  /** The column's body — called from interpreted eval AND generated code
     * (static call keeps whole-stage codegen intact). */
   def evalRow(input: UTF8String): InternalRow = {
     val raw = input.toString

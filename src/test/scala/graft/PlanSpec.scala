@@ -316,4 +316,30 @@ class PlanSpec extends SparkSpec {
     assert(hints.isEmpty, s"analyzed plan carries hints: $hints")
     assert(planOf(df).contains("LeftSemi"))
   }
+
+  test("q_minhash_pairs / q_lsh_pairs_md5 scan documents once (signatures computed once)") {
+    // the self-join's two sides share one exchange only while their
+    // signature expressions compare equal; a second documents scan means
+    // the signature pipeline runs twice
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
+    // every node once: a reused exchange is not descended into
+    def nodes(p: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = p +: (p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _: ReusedExchangeExec => Nil
+      case _ => (p.children ++ p.subqueries).flatMap(nodes)
+    })
+    Seq("q_minhash_pairs", "q_lsh_pairs_md5").foreach { q =>
+      val df = SparkEntry.queries(q)(spark, s"${TestData.root}/sf0.01")
+      assert(df.collect().nonEmpty, s"$q returned no pairs")
+      val scans = nodes(df.queryExecution.executedPlan).collect {
+        case s: FileSourceScanExec
+            if s.relation.location.rootPaths.exists(_.getName == "documents.parquet") => s
+      }
+      assert(scans.size === 1, s"$q:\n${df.queryExecution.executedPlan.treeString.take(3000)}")
+    }
+  }
 }

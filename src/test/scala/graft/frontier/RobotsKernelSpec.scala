@@ -3,10 +3,13 @@ package graft.frontier
 import graft.SparkSpec
 import org.apache.spark.sql.functions._
 
-/** r6: the fused [[graft.functions.RobotsAllowed]] codegen kernel must
-  * yield the exact verdict of the round-5 higher-order fold it replaced
-  * — randomized rule sets, equal-length allow/deny ties, unicode
-  * prefixes (numChars ≠ numBytes), no-match and empty-rules rows. */
+/** r6: the fused [[graft.functions.RobotsAllowed]] kernel (a static call
+  * inside codegen) must yield the exact verdict of the round-5
+  * higher-order fold it replaced — randomized rule sets, equal-length
+  * allow/deny ties, unicode prefixes (numChars ≠ numBytes), no-match and
+  * empty-rules rows. Its rules column is the
+  * array<struct<path_prefix: string, allowed: boolean>> that
+  * [[Wave.robotsGate]] builds. */
 class RobotsKernelSpec extends SparkSpec {
 
   private def oldVerdict(rules: org.apache.spark.sql.Column,

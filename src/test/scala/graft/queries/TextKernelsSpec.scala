@@ -197,4 +197,25 @@ class TextKernelsSpec extends SparkSpec {
       TextKernels2.simhashXx(split(col("text"), "\\s+")).as("s")).collect()
     assert(n(0).isNullAt(0) && n(0).isNullAt(1))
   }
+
+  test("a null token element nulls all six token kernels, codegen and interpreted") {
+    import spark.implicits._
+    val df = Seq(
+      (1L, Seq("a", null, "c", "d", "e", "f")),
+      (2L, Seq("a", "b", "c", "d", "e", "f"))
+    ).toDF("id", "toks").repartition(2) // no LocalRelation constant-folding
+    val kernels = Seq(
+      TextKernels2.minhashSigsXx(col("toks")), TextKernels2.minhashSigsMd5(col("toks")),
+      TextKernels2.simhashXx(col("toks")), TextKernels2.simhashMd5(col("toks")),
+      TextKernels2.winnowFpsXx(col("toks")), TextKernels2.winnowFpsMd5(col("toks")))
+    for ((mode, wholeStage) <- Seq("CODEGEN_ONLY" -> "true", "NO_CODEGEN" -> "false"))
+      withConf("spark.sql.codegen.factoryMode" -> mode,
+        "spark.sql.codegen.wholeStage" -> wholeStage) {
+        val r = df.select(col("id") +: kernels: _*).collect().sortBy(_.getLong(0))
+        kernels.indices.foreach { k =>
+          assert(r(0).isNullAt(k + 1), s"$mode: kernel $k must be null on a null element")
+          assert(!r(1).isNullAt(k + 1), s"$mode: kernel $k must be set on a full array")
+        }
+      }
+  }
 }
